@@ -22,7 +22,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from filda_spark import pipeline
+from filda_spark import pipeline, runner
 from filda_spark.relational import _rfloor
 from filda_spark.namelist import make_namelist
 
@@ -106,15 +106,12 @@ def fire_detections(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (d, spark.sparkContext.applicationId)
     if key in _DET_STAGE_CACHE:
         return spark.read.parquet(_DET_STAGE_CACHE[key])
-    det = pipeline.detect_detections(spark, d, _nl(geom))
     # enrich's semi-join reduction and dedup's self-join re-reference the
-    # detections several times — stage the raw detect output to parquet once
-    # (same materialization the production runner uses). Per-session tempdir:
+    # detections several times — stage the fit output once, with the enrich
+    # keys, exactly as the production runner does. Per-session tempdir:
     # staging inside the shared corpus cache would race concurrent sessions.
     stage = os.path.join(_session_tmpdir("filda_stage_"), "detections")
-    # stage WITH precomputed enrich keys: see runner.process_docs — the
-    # key-set jobs inside enrich become pruned parquet scans
-    pipeline.enrich_keys(det).write.mode("overwrite").parquet(stage)
+    runner.stage_fitted(spark, pipeline.detect_granules(spark, d, _nl(geom)), stage)
     det = pipeline.enrich(spark, spark.read.parquet(stage), d)
     final = os.path.join(_session_tmpdir("filda_stage_"), "deduped")
     pipeline.dedup(det).write.mode("overwrite").parquet(final)

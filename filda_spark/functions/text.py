@@ -62,15 +62,6 @@ def char_shingles_sql(doc_table: str, id_col: str, text_col: str, k: int, max_le
 # lexicographic MIN over the doc's shingles. Identical md5 hex on both engines.
 
 
-def minhash_signature(shingles: DataFrame, id_col: str, n_perm: int) -> DataFrame:
-    """shingles: (id, shingle) -> (id, sig_0..sig_{n-1}) via one groupBy."""
-    aggs = [
-        F.min(F.md5(F.concat(F.col("shingle"), F.lit(f":{p}")))).alias(f"sig_{p}")
-        for p in range(n_perm)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
 def minhash_signature_sql(shingle_sql: str, id_col: str, n_perm: int) -> str:
     cols = ", ".join(
         f"min(md5(shingle || ':{p}')) AS sig_{p}" for p in range(n_perm)

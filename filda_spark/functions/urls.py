@@ -50,17 +50,3 @@ def tavg1_urls(dates: DataFrame, date_col: str = "d") -> DataFrame:
             geos_fp_url(F.col("_d"), F.col("coln"), hhmm).alias("url"),
         )
     )
-
-
-def tavg1_urls_py(yyyymmdd: str, collections=TAVG1_COLLECTIONS) -> list[str]:
-    """Plain-python twin of the reference generator (GEOS_FP.py:42-108)."""
-    y, m, d = yyyymmdd[0:4], yyyymmdd[4:6], yyyymmdd[6:8]
-    urls = []
-    for ih in range(24):
-        ch = str(ih).zfill(2) + "30"
-        for coln in collections:
-            if "tavg1" in coln:
-                urls.append(
-                    f"{PORTAL}Y{y}/M{m}/D{d}/GEOS.fp.asm.{coln}.{yyyymmdd}_{ch}.V01.nc4"
-                )
-    return urls

@@ -38,23 +38,6 @@ def hyperplane_component(plane: int, i: int) -> float:
     return math.sin(plane * 8191.0 + i * 127.0)
 
 
-def lsh_bucket(a: Column, dim: int, n_planes: int, plane_offset: int = 0) -> Column:
-    """Sign-of-dot-product bucket over ``n_planes`` deterministic hyperplanes
-    starting at ``plane_offset``. Bucket id = sum_j sign_j * 2^j; a coarse
-    ANN pre-filter: only vectors in the same bucket are compared exactly
-    (the 100 TB path — the cross join is the small-scale oracle). Multiple
-    hash tables (OR-amplification) use disjoint plane_offset ranges."""
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        d = F.lit(0.0)
-        for i in range(dim):
-            d = d + F.element_at(a, i + 1).cast("double") * F.lit(
-                hyperplane_component(plane_offset + j, i)
-            )
-        bucket = bucket + F.when(d > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
-
-
 def lsh_buckets_udf(dim: int, k_planes: int, n_tables: int):
     """Arrow-vectorized multi-table bucket computation: one numpy pass
     returns all n_tables bucket ids per vector. The per-plane dot product

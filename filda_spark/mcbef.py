@@ -283,8 +283,8 @@ N_SAMPLES = N_CHAINS * N_DRAWS
 
 
 def set_sampler_depth(chains: int, tune: int, draws: int) -> None:
-    """Configure Metropolis depth from a namelist (reference keys
-    'Number of Chain'/'Number of Tune'/'Number of Draw'). Module-level on
+    """Configure Metropolis depth (reference namelist keys 'Number of
+    Chain'/'Number of Tune'/'Number of Draw'). Module-level on
     purpose: the constants are closed over by the Arrow-batch kernels the
     executors run, and a broadcast dict would put a per-row dict lookup
     in the hot loop for a value that never changes within a job."""
@@ -293,12 +293,26 @@ def set_sampler_depth(chains: int, tune: int, draws: int) -> None:
     N_SAMPLES = N_CHAINS * N_DRAWS
 
 
+def _env_depth(raw: str) -> tuple[int, int, int]:
+    """Parse FILDA_MCBEF_DEPTH: exactly three positive integers."""
+    try:
+        depth = tuple(int(v) for v in raw.split(","))
+    except ValueError:
+        depth = ()
+    if len(depth) != 3 or min(depth) < 1:
+        raise ValueError(
+            f"FILDA_MCBEF_DEPTH must be three positive integers "
+            f"'chains,tune,draws', got {raw!r}"
+        )
+    return depth
+
+
 # Python UDF workers import this module fresh, so a driver-side
 # set_sampler_depth() call does not reach them; FILDA_MCBEF_DEPTH
 # ("chains,tune,draws", e.g. "2,2000,1000") configures depth at import
 # time in every process (set it in spark.executorEnv on a cluster).
 if os.environ.get("FILDA_MCBEF_DEPTH"):
-    set_sampler_depth(*(int(v) for v in os.environ["FILDA_MCBEF_DEPTH"].split(",")))
+    set_sampler_depth(*_env_depth(os.environ["FILDA_MCBEF_DEPTH"]))
 
 
 def _seed(doc_id: str, line: int, sample: int) -> int:

@@ -286,7 +286,6 @@ def frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
 # four bands — the standard banded recall/cost trade, mirrored exactly in
 # the DuckDB oracle. Constant rasters (no structure) and non-2D payloads
 # hash to None and are skipped on BOTH sides.
-PHASH_BITS = 64
 PHASH_BANDS = 4
 
 

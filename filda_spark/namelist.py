@@ -58,14 +58,6 @@ DEFAULTS: dict[str, float | int] = {
     "saa_east": 20.0,
     # bowtie overlap threshold (FILDA.py:2288-2292, 2348-2349)
     "thres_bowtie": 0.2,
-    # MCBEF Metropolis depth ('Number of Chain/Tune/Draw',
-    # src/MCBEF/namelist.input:6-8 = 2/2000/1000). The engine default is
-    # the 5x-cheaper short run the parity fixtures pin; pass the
-    # reference values (mcbef.REFERENCE_DEPTH) for operational depth and
-    # export FILDA_MCBEF_DEPTH for executor processes.
-    "mcbef_n_chain": 2,
-    "mcbef_n_tune": 200,
-    "mcbef_n_draw": 300,
 }
 
 

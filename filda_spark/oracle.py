@@ -6,13 +6,10 @@ rows, fire masks, QA rasters, tile assignments) — SURVEY.md §5 strategy 1.
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
 
 from filda_spark import kernels, spatial
-from filda_spark.fixtures import unpack_media
 from filda_spark.grids import regular_grid_idx_np, sinu_np, pc_tile_np
 from filda_spark.namelist import make_namelist
 
@@ -373,14 +370,3 @@ def run_corpus(corpus: dict, nl: dict | None = None) -> dict:
     det = dedup_detections(det)
     tiles = tiles_frame(det)
     return dict(detections=det, tiles=tiles, per_doc=per_doc)
-
-
-def media_by_doc(media_df: pd.DataFrame) -> dict:
-    out = {}
-    for doc_id, rows in media_df.groupby("doc_id"):
-        out[doc_id] = unpack_media(rows)
-    return out
-
-
-def header_from_spans(spans) -> dict:
-    return json.loads(spans[0]["text"] if isinstance(spans[0], dict) else spans[0].text)

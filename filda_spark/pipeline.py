@@ -33,7 +33,6 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -83,13 +82,12 @@ def _field(c: str) -> T.StructField:
 
 DET_SCHEMA = T.StructType([_field(c) for c in oracle.DET_COLUMNS])
 
-# the per-detection Planck fit runs as its own stage (see detect_detections)
+# the per-detection Planck fit runs as its own stage (see fit_detections)
 FIT_COLS = ["FP_Fire_Temp", "FP_BG_Temp", "FP_Fire_Frac", "FP_Opt_Status"]
 PRE_FIT_COLS = [c for c in oracle.DET_COLUMNS if c not in FIT_COLS]
-PRE_FIT_SCHEMA = T.StructType([_field(c) for c in PRE_FIT_COLS])
-# metrics variant (runner lineage): + the granule's measured kernel wall time
-PRE_FIT_METRICS_SCHEMA = T.StructType(
-    list(PRE_FIT_SCHEMA.fields) + [T.StructField("_detect_wall_s", T.DoubleType())]
+# detect output: pre-fit columns + the granule's measured kernel wall time
+DETECT_SCHEMA = T.StructType(
+    [_field(c) for c in PRE_FIT_COLS] + [T.StructField("_detect_wall_s", T.DoubleType())]
 )
 
 MASK_SCHEMA = T.StructType(
@@ -242,16 +240,16 @@ def _check_spans(doc_pdf: pd.DataFrame, media_pdf: pd.DataFrame) -> None:
         raise ValueError("media spans do not match media table")
 
 
-def make_detect_fn(anc_bc, nl: dict, with_metrics: bool = False):
+def make_detect_fn(anc_bc, nl: dict):
     """Kernel factory: ancillary broadcast + namelist closure; returns the
     cogrouped applyInPandas function (documents-group, media-group) -> rows.
 
-    with_metrics: append a ``_detect_wall_s`` column carrying the granule's
-    measured decode+detect kernel wall time (north rule: per-partition
-    lineage rows/sec must be TRUE per-granule timings, not batch averages).
-    A granule with zero detections emits one sentinel row (FP_Line = -1,
-    filtered out by the caller) so every granule still reports its timing."""
-    cols = PRE_FIT_COLS + (["_detect_wall_s"] if with_metrics else [])
+    Every row carries ``_detect_wall_s``, the granule's measured
+    decode+detect kernel wall time (north rule: per-partition lineage
+    rows/sec must be TRUE per-granule timings, not batch averages). A
+    granule with zero detections emits one sentinel row (FP_Line = -1,
+    dropped by fit_detections) so every granule still reports its timing."""
+    cols = PRE_FIT_COLS + ["_detect_wall_s"]
 
     def detect(doc_pdf: pd.DataFrame, media_pdf: pd.DataFrame) -> pd.DataFrame:
         if doc_pdf.empty or media_pdf.empty:
@@ -262,8 +260,6 @@ def make_detect_fn(anc_bc, nl: dict, with_metrics: bool = False):
         media = unpack_media(media_pdf, kinds=DETECT_KINDS)
         res = oracle.detect_granule(doc_id, media, anc_bc.value, nl, fit=False, masks=False)
         out = oracle.detections_frame(doc_id, res["det"])[PRE_FIT_COLS]
-        if not with_metrics:
-            return out
         if out.empty:
             sentinel = {
                 c: [-1 if c in _INT_COLS else np.nan] for c in PRE_FIT_COLS if c != "doc_id"
@@ -325,11 +321,18 @@ def make_masks_fn(anc_bc, nl: dict):
 def _cogroup(
     spark,
     corpus_dir: str,
-    fn,
+    make_fn,
     schema,
+    nl: dict | None = None,
     doc_filter: DataFrame | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
+    """One granule per group through the kernel ``make_fn(anc_bc, nl)``
+    builds, with the corpus ancillary rasters broadcast."""
+    from filda_spark.fixtures import load_ancillary
+
+    anc_bc = spark.sparkContext.broadcast(load_ancillary(corpus_dir))
+    fn = make_fn(anc_bc, nl or make_namelist())
     docs = night_documents(load_documents(spark, corpus_dir)).select("doc_id", "spans")
     if doc_filter is not None:
         # resume/streaming frontier: prune BEFORE the cogroup so undone
@@ -355,8 +358,7 @@ def _cogroup(
     # co-locate hot granules (balls-in-bins max load ~4); at 4x the
     # collision probability is negligible and empty partitions cost ~ms.
     # granule count sizes the decode stage; parquet metadata makes this a
-    # cheap count, and `spark.filda.numDetectPartitions` overrides it where
-    # even that is unwanted (e.g. Iceberg snapshot stats already know it)
+    # cheap count, skipped when the caller already counted the frontier
     if media_b is not None:
         # bucketed layout: the media side's scan partitioning already
         # satisfies the cogroup's hash-clustered requirement — no explicit
@@ -369,13 +371,9 @@ def _cogroup(
             .cogroup(media.groupBy("doc_id"))
             .applyInPandas(fn, schema=schema)
         )
-    n_override = int(spark.conf.get("spark.filda.numDetectPartitions", "0"))
-    if n_override:
-        n_parts = n_override
-    else:
-        if n_docs is None:
-            n_docs = docs.count()
-        n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), min(4 * n_docs, 8192))
+    if n_docs is None:
+        n_docs = docs.count()
+    n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), min(4 * n_docs, 8192))
     return (
         docs.repartition(n_parts, "doc_id")
         .groupBy("doc_id")
@@ -384,61 +382,41 @@ def _cogroup(
     )
 
 
-def detect_detections(
-    spark: SparkSession,
-    corpus_dir: str,
-    nl: dict | None = None,
-    doc_filter: DataFrame | None = None,
-) -> DataFrame:
-    from filda_spark.fixtures import load_ancillary
-
-    nl = nl or make_namelist()
-    anc_bc = spark.sparkContext.broadcast(load_ancillary(corpus_dir))
-    pre = _cogroup(spark, corpus_dir, make_detect_fn(anc_bc, nl), PRE_FIT_SCHEMA, doc_filter)
-    return fit_detections(spark, pre)
-
-
-def detect_pre_metrics(
+def detect_granules(
     spark: SparkSession,
     corpus_dir: str,
     nl: dict | None = None,
     doc_filter: DataFrame | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """Pre-fit detections + per-granule ``_detect_wall_s`` (see
-    make_detect_fn(with_metrics=True)). The runner stages this, derives the
-    lineage metrics, then feeds the real rows (FP_Line >= 0) to
-    fit_detections. ``n_docs``, when the caller already counted the
-    frontier (the runner always has), sizes the decode stage without a
-    second count job."""
-    from filda_spark.fixtures import load_ancillary
-
-    nl = nl or make_namelist()
-    anc_bc = spark.sparkContext.broadcast(load_ancillary(corpus_dir))
-    return _cogroup(
-        spark,
-        corpus_dir,
-        make_detect_fn(anc_bc, nl, with_metrics=True),
-        PRE_FIT_METRICS_SCHEMA,
-        doc_filter,
-        n_docs=n_docs,
-    )
+    """Pre-fit detections of the night granules (pruned to ``doc_filter``
+    before decode) with per-granule ``_detect_wall_s`` and zero-detection
+    sentinel rows (see make_detect_fn). ``n_docs``, when the caller already
+    counted the frontier, sizes the decode stage without a count job."""
+    return _cogroup(spark, corpus_dir, make_detect_fn, DETECT_SCHEMA, nl, doc_filter, n_docs)
 
 
 def fit_detections(spark: SparkSession, pre: DataFrame) -> DataFrame:
-    # fit stage: hot granules carry ~10x the detections, so the fit is
-    # rebalanced round-robin across tasks instead of inheriting the
-    # granule partitioning (per-row independent => order-free)
+    """Planck fit of the real detect rows (sentinels and timing dropped).
+    Hot granules carry ~10x the detections, so the fit is rebalanced
+    round-robin across tasks instead of inheriting the granule
+    partitioning (per-row independent => order-free)."""
+    pre = pre.filter(F.col("FP_Line") >= 0).drop("_detect_wall_s")
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return pre.repartition(n_parts).mapInPandas(_fit_stage, schema=DET_SCHEMA)
 
 
-def detect_masks(spark: SparkSession, corpus_dir: str, nl: dict | None = None) -> DataFrame:
-    from filda_spark.fixtures import load_ancillary
+def detect_detections(
+    spark: SparkSession,
+    corpus_dir: str,
+    nl: dict | None = None,
+    doc_filter: DataFrame | None = None,
+) -> DataFrame:
+    return fit_detections(spark, detect_granules(spark, corpus_dir, nl, doc_filter))
 
-    nl = nl or make_namelist()
-    anc_bc = spark.sparkContext.broadcast(load_ancillary(corpus_dir))
-    return _cogroup(spark, corpus_dir, make_masks_fn(anc_bc, nl), MASK_SCHEMA)
+
+def detect_masks(spark: SparkSession, corpus_dir: str, nl: dict | None = None) -> DataFrame:
+    return _cogroup(spark, corpus_dir, make_masks_fn, MASK_SCHEMA, nl)
 
 
 # ---------------------------------------------------------------------------
@@ -516,9 +494,6 @@ def _semi_reduced_left_join(
     return small.join(F.broadcast(reduced), keys, "left")
 
 
-ENRICH_KEY_COLS = ("_h", "_v", "_row", "_col", "_ph", "_pv", "_py", "_px")
-
-
 def enrich_keys(det: DataFrame) -> DataFrame:
     """Precompute the eight static-join key columns (sinusoidal land-cover
     keys + Plate-Carree peatland keys) so a caller that stages ``det`` to
@@ -540,29 +515,26 @@ def enrich_keys(det: DataFrame) -> DataFrame:
     )
 
 
+def _broadcast_polygons(spark: SparkSession, path: str, id_key: str):
+    """The polygon table at ``path`` as a broadcast list of
+    ``{id_key, lat, lon}`` dicts (the PIP UDFs' input)."""
+    pdf = pd.read_parquet(path)
+    return spark.sparkContext.broadcast(
+        [
+            {id_key: int(getattr(r, id_key)), "lat": list(r.lat), "lon": list(r.lon)}
+            for r in pdf.itertuples()
+        ]
+    )
+
+
 def enrich(spark: SparkSession, det: DataFrame, corpus_dir: str) -> DataFrame:
     """Land cover (sinusoidal equi-join, water override 17), peatland
     (Plate-Carree equi-join), gas-flare PIP, qcell/tile encodes."""
     lc = spark.read.parquet(f"{corpus_dir}/land_cover.parquet")
     peat = spark.read.parquet(f"{corpus_dir}/peatland.parquet")
-    flares_pdf = pd.read_parquet(f"{corpus_dir}/gas_flare_polygons.parquet")
-    polys = [
-        dict(flare_id=int(r.flare_id), lat=list(r.lat), lon=list(r.lon))
-        for r in flares_pdf.itertuples()
-    ]
-    polys_bc = spark.sparkContext.broadcast(polys)
-    import os
-
-    water_bc = None
+    polys_bc = _broadcast_polygons(spark, f"{corpus_dir}/gas_flare_polygons.parquet", "flare_id")
     wp = f"{corpus_dir}/water_polygons.parquet"
-    if os.path.exists(wp):
-        water_pdf = pd.read_parquet(wp)
-        water_bc = spark.sparkContext.broadcast(
-            [
-                dict(water_id=int(r.water_id), lat=list(r.lat), lon=list(r.lon))
-                for r in water_pdf.itertuples()
-            ]
-        )
+    water_bc = _broadcast_polygons(spark, wp, "water_id") if os.path.exists(wp) else None
 
     # both key sets are derived from det AS STAGED (pre-join): when the
     # caller precomputed enrich_keys before staging, each key-set broadcast

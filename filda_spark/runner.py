@@ -11,10 +11,10 @@ Layout under ``--out``:
   detection: (doc_id, FP_Line, FP_Sample, is_dup, dup_of, _cell). Updated
   INCREMENTALLY: a batch can only change verdicts for detections within the
   dedup radius of its own rows, so each run recomputes the kRing
-  neighborhood of the batch's level-14 cells and dynamic-partition-
-  overwrites only the affected tiles (no full-store shuffle per batch).
-- ``tiles/`` parquet partitioned by ``tile_id`` — fire-density rollup,
-  same affected-tiles-only dynamic overwrite.
+  neighborhood of the batch's level-14 cells, stages the affected tiles and
+  swaps their partition directories in (no full-store shuffle per batch).
+- ``tiles/`` parquet partitioned by ``tile_id`` — fire-density rollup of
+  the same affected tiles only.
 - ``lineage/`` parquet — one row per (run_id, stage, partition_key=doc_id):
   rows_out, wall_s, rows_per_sec, status. The set of doc_ids with
   status='done' at stage 'detect' is the resume frontier: a re-run prunes
@@ -23,6 +23,12 @@ Layout under ``--out``:
 - ``_snapshots/log.jsonl`` — the commit log (seq, run_id, docs, rows),
   one record per landed batch; ``read_detections_as_of(run_id)`` is the
   time-travel read (granule-membership snapshots, compaction-proof).
+
+Every rewrite of existing tile partitions (tiles, compaction, z-order,
+delete, post-delete scrub) is a dynamic partition overwrite requested per
+write (the ``partitionOverwriteMode`` writer option): only the partitions
+the write produces are replaced, and the session conf, which other
+queries sharing the session read, is never changed.
 
 Scale posture: the frontier is a broadcast semi/anti-join (doc_id count
 ~= 1e6/day at production scale — still broadcastable; beyond that it
@@ -39,7 +45,10 @@ CLI (spark-submit friendly):
 from __future__ import annotations
 
 import argparse
+import contextlib
+import json
 import os
+import shutil
 import time
 import uuid
 
@@ -83,6 +92,64 @@ def done_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
         lin.filter((F.col("stage") == "detect") & (F.col("status") == "done"))
         .select("partition_key")
         .distinct()
+    )
+
+
+def frontier(spark: SparkSession, out_dir: str, docs: DataFrame) -> DataFrame:
+    """doc_ids of the night granules in ``docs`` not yet detected: Day
+    pruning, then a broadcast anti-join against the lineage frontier (the
+    frontier stays off the driver)."""
+    todo = pipeline.night_documents(docs).select("doc_id")
+    done = done_doc_ids(spark, out_dir)
+    if done is None:
+        return todo
+    return todo.join(F.broadcast(done), todo.doc_id == done.partition_key, "left_anti")
+
+
+def _stage_path(out_dir: str, kind: str) -> str:
+    return f"{out_dir}/_stage/{kind}_{uuid.uuid4().hex[:12]}"
+
+
+@contextlib.contextmanager
+def _staged(spark: SparkSession, df: DataFrame, out_dir: str, kind: str):
+    """Write ``df`` once to a staging parquet and yield its re-read, so the
+    block's re-references (semi-join reductions, self-joins, a rewrite of
+    the very partitions ``df`` reads) never re-run its lineage. The stage
+    is removed when the block completes; a crash leaves it to
+    ``remove_orphan_files``."""
+    path = _stage_path(out_dir, kind)
+    df.write.mode("overwrite").parquet(path)
+    yield spark.read.parquet(path)
+    shutil.rmtree(path, ignore_errors=True)
+
+
+def _overwrite_tiles(df: DataFrame, path: str) -> None:
+    """Replace only the ``tile_id`` partitions of ``path`` that ``df``
+    holds (per-write dynamic partition overwrite)."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "tile_id"
+    ).parquet(path)
+
+
+def _tiles_rollup(det: DataFrame, state: DataFrame) -> DataFrame:
+    """Fire-density rollup of the store rows ``det`` under the dedup
+    verdicts of ``state``."""
+    return pipeline.tiles(det.join(state.select(*STATE_KEY, "is_dup"), STATE_KEY, "inner"))
+
+
+def _tile_bounds(det: DataFrame) -> pd.DataFrame:
+    """Per-tile lat/lon bounds and row count (<=648 rows to the driver)."""
+    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
+    return (
+        det.groupBy("tile_id")
+        .agg(
+            F.min(lat).alias("lat_min"),
+            F.max(lat).alias("lat_max"),
+            F.min(lon).alias("lon_min"),
+            F.max(lon).alias("lon_max"),
+            F.count("*").alias("rows"),
+        )
+        .toPandas()
     )
 
 
@@ -133,8 +200,6 @@ def _swap_tile_partitions(src: str, dst: str) -> list[str]:
     single-writer like every other metadata commit here — the
     parquet-layout analogue of an Iceberg manifest swap (on an object
     store this is the manifest pointer update, not a data move)."""
-    import shutil
-
     swapped: list[str] = []
     for d in sorted(os.listdir(src)):
         if not d.startswith("tile_id="):
@@ -162,8 +227,8 @@ def update_dedup_incremental(
       2. run pipeline.dedup on store rows in ring2 cells — verdicts for
          ring1 rows are exact (all their within-eps partners are present)
       3. dedup_state := carried-forward rows (affected tiles, outside
-         ring1) + recomputed ring1 rows, dynamic-overwriting ONLY the
-         affected tile partitions
+         ring1) + recomputed ring1 rows, swapped into ONLY the affected
+         tile partitions
       4. tiles := rollup of the affected tiles from store JOIN state,
          dynamic-overwriting the same partitions
 
@@ -184,8 +249,7 @@ def update_dedup_incremental(
         )
         new_state.write.mode("overwrite").partitionBy("tile_id").parquet(f"{out_dir}/dedup_state")
         state = spark.read.parquet(f"{out_dir}/dedup_state")
-        joined = store.join(state.select(*STATE_KEY, "is_dup"), STATE_KEY, "inner")
-        pipeline.tiles(joined).write.mode("overwrite").partitionBy("tile_id").parquet(
+        _tiles_rollup(store, state).write.mode("overwrite").partitionBy("tile_id").parquet(
             f"{out_dir}/tiles"
         )
         return
@@ -240,7 +304,7 @@ def update_dedup_incremental(
     # same single-writer commit discipline as the snapshot log. The
     # tile_id repartition keeps ~one file per tile (same reasoning as the
     # detections append) on a shuffle of only the neighborhood rows.
-    stage = f"{out_dir}/_stage/state_{uuid.uuid4().hex[:8]}"
+    stage = _stage_path(out_dir, "state")
     merged.repartition("tile_id").write.mode("overwrite").partitionBy("tile_id").parquet(stage)
     swapped = _swap_tile_partitions(stage, f"{out_dir}/dedup_state")
     if not swapped:
@@ -249,15 +313,7 @@ def update_dedup_incremental(
         F.col("tile_id").isin(swapped)  # partition-pruned: only swapped dirs read
     )
     det_aff = store.filter(F.col("tile_id").isin(swapped))
-    joined = det_aff.join(merged.select(*STATE_KEY, "is_dup"), STATE_KEY, "inner")
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        pipeline.tiles(joined).write.mode("overwrite").partitionBy("tile_id").parquet(
-            f"{out_dir}/tiles"
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    _overwrite_tiles(_tiles_rollup(det_aff, merged), f"{out_dir}/tiles")
 
 
 def _mark(timings: dict | None, key: str, t0: float) -> float:
@@ -290,87 +346,76 @@ def process_docs(
     measured inside the cogroup task (_detect_wall_s), not batch averages
     (north rule: per-partition rows/sec metrics)."""
     t = time.perf_counter()
-    pre = pipeline.detect_pre_metrics(spark, corpus_dir, nl, doc_filter=todo, n_docs=n_docs)
-    # stage the pre-fit detections once: the fit, enrich and dedup stages
-    # re-reference them several times (semi-join reductions, self-join) and
-    # must not re-run the decode+detect kernel per reference
-    pre_stage = f"{out_dir}/_stage/{run_id}_pre"
-    pre.write.mode("overwrite").parquet(pre_stage)
-    pre = spark.read.parquet(pre_stage)
-    t = _mark(timings, "decode_detect", t)
-    det = pipeline.fit_detections(
-        spark, pre.filter(F.col("FP_Line") >= 0).drop("_detect_wall_s")
-    )
-    stage = f"{out_dir}/_stage/{run_id}"
-    # enrich join keys are persisted WITH the staged fit output: enrich's
-    # two semi-join key-set jobs then read 4 pruned int columns from this
-    # parquet instead of re-running the sinusoidal pandas UDF per job
-    pipeline.enrich_keys(det).write.mode("overwrite").parquet(stage)
-    t = _mark(timings, "fit", t)
-    enriched = pipeline.enrich(spark, spark.read.parquet(stage), corpus_dir)
-    # cluster by tile before the partitioned append: without this every task
-    # writes a file into every tile directory it touches (tasks x tiles
-    # small files per batch — the commit, not the data, becomes the tail);
-    # one small shuffle of the detection rows yields ~one file per tile
-    enriched.repartition("tile_id").write.mode("append").partitionBy("tile_id").parquet(
-        f"{out_dir}/detections"
-    )
-    t = _mark(timings, "enrich_append", t)
+    pre = pipeline.detect_granules(spark, corpus_dir, nl, doc_filter=todo, n_docs=n_docs)
+    # stage the detect output once: the fit and the lineage metrics both
+    # re-reference it and must not re-run the decode+detect kernel
+    with _staged(spark, pre, out_dir, f"{run_id}_pre") as pre:
+        t = _mark(timings, "decode_detect", t)
+        stage = _stage_path(out_dir, run_id)
+        stage_fitted(spark, pre, stage)
+        t = _mark(timings, "fit", t)
+        enriched = pipeline.enrich(spark, spark.read.parquet(stage), corpus_dir)
+        # cluster by tile before the partitioned append: without this every
+        # task writes a file into every tile directory it touches (tasks x
+        # tiles small files per batch — the commit, not the data, becomes
+        # the tail); one small shuffle of the detection rows yields ~one
+        # file per tile
+        enriched.repartition("tile_id").write.mode("append").partitionBy("tile_id").parquet(
+            f"{out_dir}/detections"
+        )
+        t = _mark(timings, "enrich_append", t)
 
-    batch = spark.read.parquet(stage)
-    # row-group-metadata count: one cheap job that both gates the dedup
-    # reconcile AND supplies the snapshot row count (it used to take a
-    # limit(1) probe plus a separate lineage aggregate — two extra jobs in
-    # the fixed per-batch tail)
-    n_rows = batch.count()
-    if n_rows > 0:
-        update_dedup_incremental(spark, out_dir, batch)
-        t = _mark(timings, "dedup_tiles", t)
-        _update_manifest(spark, out_dir, batch)
-        t = _mark(timings, "manifest", t)
+        batch = spark.read.parquet(stage)
+        # row-group-metadata count: one cheap job that both gates the dedup
+        # reconcile AND supplies the snapshot row count
+        n_rows = batch.count()
+        if n_rows > 0:
+            update_dedup_incremental(spark, out_dir, batch)
+            t = _mark(timings, "dedup_tiles", t)
+            _update_manifest(out_dir, batch)
+            t = _mark(timings, "manifest", t)
 
-    # per-granule metrics off the staged pre-fit rows (sentinel rows carry
-    # the timing for zero-detection granules and count 0 toward rows_out);
-    # Day-pruned granules in the frontier never decode -> wall_s 0.0
-    metrics = pre.groupBy("doc_id").agg(
-        F.max("_detect_wall_s").alias("_wall"),
-        F.sum(F.when(F.col("FP_Line") >= 0, 1).otherwise(0)).alias("_n"),
-    )
-    lineage = (
-        todo.select("doc_id")
-        .join(metrics, "doc_id", "left")
-        .select(
+        # per-granule metrics off the staged detect rows (sentinel rows
+        # carry the timing for zero-detection granules and count 0 toward
+        # rows_out); Day-pruned granules in the frontier never decode ->
+        # wall_s 0.0
+        metrics = pre.groupBy("doc_id").agg(
+            F.max("_detect_wall_s").alias("_wall"),
+            F.sum(F.when(F.col("FP_Line") >= 0, 1).otherwise(0)).alias("_n"),
+        )
+        n = F.coalesce(F.col("_n"), F.lit(0))
+        wall = F.round(F.coalesce(F.col("_wall"), F.lit(0.0)), 4)
+        lineage = todo.select("doc_id").join(metrics, "doc_id", "left").select(
             F.lit(run_id).alias("run_id"),
             F.lit("detect").alias("stage"),
             F.col("doc_id").alias("partition_key"),
-            F.coalesce(F.col("_n"), F.lit(0)).cast("long").alias("rows_out"),
-            F.round(F.coalesce(F.col("_wall"), F.lit(0.0)), 4).alias("wall_s"),
-            (
-                F.coalesce(F.col("_n"), F.lit(0))
-                / F.greatest(
-                    F.round(F.coalesce(F.col("_wall"), F.lit(0.0)), 4), F.lit(1e-9)
-                )
-            ).alias("rows_per_sec"),
+            n.cast("long").alias("rows_out"),
+            wall.alias("wall_s"),
+            (n / F.greatest(wall, F.lit(1e-9))).alias("rows_per_sec"),
             F.lit("done").alias("status"),
         )
-    )
-    lineage.write.mode("append").parquet(_lineage_path(out_dir))
-    # snapshot stats come free: docs == the frontier count the caller
-    # already has; rows == the staged-batch count above (sum of per-doc
-    # rows_out by construction) — no lineage re-aggregation job
-    if n_docs is None:
-        n_docs = todo.count()
-    _commit_snapshot(spark, out_dir, run_id, docs=int(n_docs), rows=int(n_rows))
-    t = _mark(timings, "lineage_snapshot", t)
-    # staging is consumed (all writes above are actions) — leave no residue
-    import shutil
-
-    shutil.rmtree(pre_stage, ignore_errors=True)
+        lineage.write.mode("append").parquet(_lineage_path(out_dir))
+        # snapshot stats come free: docs == the frontier count the caller
+        # already has; rows == the staged-batch count above (sum of per-doc
+        # rows_out by construction) — no lineage re-aggregation job
+        if n_docs is None:
+            n_docs = todo.count()
+        _commit_snapshot(spark, out_dir, run_id, docs=int(n_docs), rows=int(n_rows))
+        t = _mark(timings, "lineage_snapshot", t)
     shutil.rmtree(stage, ignore_errors=True)
     try:
         os.rmdir(f"{out_dir}/_stage")  # parent, if this was its last run
     except OSError:
         pass
+
+
+def stage_fitted(spark: SparkSession, pre: DataFrame, path: str) -> None:
+    """Fit the real rows of ``pipeline.detect_granules`` output and stage
+    them to parquet WITH the enrich join keys: enrich's two semi-join
+    key-set jobs then read 4 pruned int columns from this parquet instead
+    of re-running the sinusoidal pandas UDF per job."""
+    det = pipeline.fit_detections(spark, pre)
+    pipeline.enrich_keys(det).write.mode("overwrite").parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -383,7 +428,7 @@ def _manifest_path(out_dir: str) -> str:
     return f"{out_dir}/_manifest/partition_stats.parquet"
 
 
-def _update_manifest(spark: SparkSession, out_dir: str, batch: DataFrame) -> None:
+def _update_manifest(out_dir: str, batch: DataFrame) -> None:
     """Merge the batch's per-tile column bounds into the partition-stats
     manifest: (tile_id, lat/lon min-max, rows). One agg over the staged
     batch (<=648 result rows globally), then a driver-side atomic replace —
@@ -391,18 +436,8 @@ def _update_manifest(spark: SparkSession, out_dir: str, batch: DataFrame) -> Non
     APPEND path bounds are merge-only (compaction preserves rows), so they
     only ever widen; the one shrinking operation, ``delete_detections``,
     recomputes the rows of exactly the tiles it rewrites."""
-    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
-    stats = (
-        batch.withColumn("tile_id", grids.pc_tile_name(lat, lon))
-        .groupBy("tile_id")
-        .agg(
-            F.min(lat).alias("lat_min"),
-            F.max(lat).alias("lat_max"),
-            F.min(lon).alias("lon_min"),
-            F.max(lon).alias("lon_max"),
-            F.count("*").alias("rows"),
-        )
-        .toPandas()
+    stats = _tile_bounds(
+        batch.withColumn("tile_id", grids.pc_tile_name(F.col("FP_Latitude"), F.col("FP_Longitude")))
     )
     if stats.empty:
         return
@@ -417,9 +452,14 @@ def _update_manifest(spark: SparkSession, out_dir: str, batch: DataFrame) -> Non
             lon_max=("lon_max", "max"),
             rows=("rows", "sum"),
         )
+    _write_manifest(stats, path)
+
+
+def _write_manifest(man: pd.DataFrame, path: str) -> None:
+    """Driver-side atomic replace of the partition-stats manifest."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    stats.to_parquet(tmp, index=False)
+    man.to_parquet(tmp, index=False)
     os.replace(tmp, path)
 
 
@@ -467,13 +507,7 @@ def _snap_log(out_dir: str) -> str:
     return f"{out_dir}/_snapshots/log.jsonl"
 
 
-def _commit_snapshot(
-    spark: SparkSession,
-    out_dir: str,
-    run_id: str,
-    docs: int | None = None,
-    rows: int | None = None,
-) -> None:
+def _commit_snapshot(spark: SparkSession, out_dir: str, run_id: str, docs: int, rows: int) -> None:
     """Append one commit record after a batch lands: (seq, run_id, new
     granules, rows appended). Driver-side single-writer append — the same
     role Iceberg's metadata commit plays; granule (doc_id) granularity
@@ -487,22 +521,8 @@ def _commit_snapshot(
     (``also_runs``): the next snapshot's membership equals the store
     content again. Detection is one column-pruned DISTINCT over the
     lineage run_id column; counts are passed in by the caller so the
-    commit no longer re-scans the full lineage store per batch."""
-    import json
-
-    if docs is None or rows is None:
-        lin = spark.read.parquet(_lineage_path(out_dir)).filter(
-            F.col("run_id") == run_id
-        )
-        agg = lin.agg(
-            F.count("*").alias("docs"), F.sum("rows_out").alias("rows")
-        ).collect()[0]
-        docs, rows = int(agg.docs), int(agg.rows or 0)
-    os.makedirs(f"{out_dir}/_snapshots", exist_ok=True)
-    # max-seq + 1, not count + 1: expiration removes old records but must
-    # never let sequence numbers collide
+    commit never re-scans the full lineage store per batch."""
     base, prior = _snap_entries(out_dir)
-    seq = (prior[-1]["seq"] if prior else base.get("last_seq", 0)) + 1
     known = set(base.get("run_ids", [])) | {run_id}
     for s in prior:
         known.add(s["run_id"])
@@ -514,20 +534,29 @@ def _commit_snapshot(
         .distinct()
         .collect()
     }
-    rec = dict(seq=seq, run_id=run_id, docs=int(docs), rows=int(rows))
+    rec = dict(run_id=run_id, docs=int(docs), rows=int(rows))
     orphans = sorted(lin_runs - known)
     if orphans:
         rec["also_runs"] = orphans
+    _append_snapshot(out_dir, (base, prior), rec)
+
+
+def _append_snapshot(out_dir: str, entries: tuple[dict, list[dict]], rec: dict) -> None:
+    """Append ``rec`` to the commit log as the next sequence number after
+    ``entries`` (``_snap_entries``): max-seq + 1, not count + 1 —
+    expiration removes old records but must never let sequence numbers
+    collide. Driver-side single-writer append."""
+    base, prior = entries
+    seq = (prior[-1]["seq"] if prior else base.get("last_seq", 0)) + 1
+    os.makedirs(f"{out_dir}/_snapshots", exist_ok=True)
     with open(_snap_log(out_dir), "a") as f:
-        f.write(json.dumps(rec) + "\n")
+        f.write(json.dumps(dict(seq=seq, **rec)) + "\n")
 
 
 def _snap_entries(out_dir: str) -> tuple[dict, list[dict]]:
     """(base record, commit records oldest first). The base record (seq 0)
     carries run_ids folded in by expire_snapshots — implicit members of
     every surviving snapshot."""
-    import json
-
     path = _snap_log(out_dir)
     if not os.path.exists(path):
         return {}, []
@@ -593,8 +622,6 @@ def expire_snapshots(out_dir: str, keep_last: int = 10) -> dict:
     of every surviving snapshot (compaction handles file-count hygiene;
     crashed-job debris is ``remove_orphan_files``' job, and row removal is
     ``delete_detections``', each with its own accounting)."""
-    import json
-
     base, snaps = _snap_entries(out_dir)
     if len(snaps) <= keep_last:
         return dict(total=len(snaps), expired=0)
@@ -643,11 +670,7 @@ def run_incremental(
     run_id = uuid.uuid4().hex[:12]
     t0 = time.perf_counter()
 
-    docs = pipeline.night_documents(pipeline.load_documents(spark, corpus_dir)).select("doc_id")
-    done = done_doc_ids(spark, out_dir)
-    todo = docs if done is None else docs.join(
-        F.broadcast(done), docs.doc_id == done.partition_key, "left_anti"
-    )
+    todo = frontier(spark, out_dir, pipeline.load_documents(spark, corpus_dir))
     n_new = todo.count()
     _mark(timings, "frontier", t0)
     if n_new:
@@ -698,8 +721,6 @@ def compact_detections(
     deterministic hash bucket, so compaction cannot itself create an
     unsplittable mega-file. Single-writer maintenance op; row content is
     exactly preserved (pinned by test)."""
-    import shutil
-
     stats = detection_file_stats(out_dir)
     result = dict(
         tiles_total=len(stats),
@@ -713,33 +734,25 @@ def compact_detections(
     root = f"{out_dir}/detections"
     det = spark.read.parquet(root).filter(F.col("tile_id").isin(todo))
     # stage: the rewrite reads the same partitions it overwrites
-    stage = f"{out_dir}/_stage/compact_{uuid.uuid4().hex[:12]}"
-    det.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
-    counts = {
-        r["tile_id"]: r["n"]
-        for r in staged.groupBy("tile_id").agg(F.count("*").alias("n")).collect()
-    }
-    n_out = {t: max(1, -(-c // target_rows_per_file)) for t, c in counts.items()}
-    if all(n == 1 for n in n_out.values()):
-        clustered = staged.repartition("tile_id")  # one task -> one file per tile
-    else:
-        mod_map = F.create_map(
-            *[x for t, n in n_out.items() for x in (F.lit(t), F.lit(n))]
-        )
-        bucket = F.pmod(F.xxhash64(*STATE_KEY), mod_map[F.col("tile_id")])
-        clustered = (
-            staged.withColumn("_bk", bucket)
-            .repartition(4 * sum(n_out.values()), "tile_id", "_bk")
-            .drop("_bk")
-        )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        clustered.write.mode("overwrite").partitionBy("tile_id").parquet(root)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    shutil.rmtree(stage, ignore_errors=True)
+    with _staged(spark, det, out_dir, "compact") as staged:
+        counts = {
+            r["tile_id"]: r["n"]
+            for r in staged.groupBy("tile_id").agg(F.count("*").alias("n")).collect()
+        }
+        n_out = {t: max(1, -(-c // target_rows_per_file)) for t, c in counts.items()}
+        if all(n == 1 for n in n_out.values()):
+            clustered = staged.repartition("tile_id")  # one task -> one file per tile
+        else:
+            mod_map = F.create_map(
+                *[x for t, n in n_out.items() for x in (F.lit(t), F.lit(n))]
+            )
+            bucket = F.pmod(F.xxhash64(*STATE_KEY), mod_map[F.col("tile_id")])
+            clustered = (
+                staged.withColumn("_bk", bucket)
+                .repartition(4 * sum(n_out.values()), "tile_id", "_bk")
+                .drop("_bk")
+            )
+        _overwrite_tiles(clustered, root)
     after = detection_file_stats(out_dir)
     result.update(tiles_compacted=len(todo), files_after=sum(after.values()))
     return result
@@ -764,8 +777,6 @@ def zorder_detections(
     sort per output task (no global sort — tile partitioning already gives
     spatial locality across files; z-order adds it within them). Row
     content exactly preserved (pinned by test)."""
-    import shutil
-
     from filda_spark.functions.bits import morton_key
 
     stats = detection_file_stats(out_dir)
@@ -775,29 +786,21 @@ def zorder_detections(
         return result
     root = f"{out_dir}/detections"
     det = spark.read.parquet(root).filter(F.col("tile_id").isin(todo))
-    stage = f"{out_dir}/_stage/zorder_{uuid.uuid4().hex[:12]}"
-    det.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
-    total = staged.count()
-    n_parts = max(len(todo), -(-total // target_rows_per_file))
-    clustered = (
-        staged.withColumn(
-            "_zk", morton_key(F.col("FP_Latitude"), F.col("FP_Longitude"))
+    with _staged(spark, det, out_dir, "zorder") as staged:
+        total = staged.count()
+        n_parts = max(len(todo), -(-total // target_rows_per_file))
+        clustered = (
+            staged.withColumn(
+                "_zk", morton_key(F.col("FP_Latitude"), F.col("FP_Longitude"))
+            )
+            # range partitioning on (tile, z) keeps each output file a
+            # contiguous z-range within its tile — oversized tiles split
+            # into disjoint z-bands instead of hash-interleaved files
+            .repartitionByRange(n_parts, "tile_id", "_zk")
+            .sortWithinPartitions("tile_id", "_zk")
+            .drop("_zk")
         )
-        # range partitioning on (tile, z) keeps each output file a contiguous
-        # z-range within its tile — oversized tiles split into disjoint
-        # z-bands instead of hash-interleaved files
-        .repartitionByRange(n_parts, "tile_id", "_zk")
-        .sortWithinPartitions("tile_id", "_zk")
-        .drop("_zk")
-    )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        clustered.write.mode("overwrite").partitionBy("tile_id").parquet(root)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    shutil.rmtree(stage, ignore_errors=True)
+        _overwrite_tiles(clustered, root)
     return result
 
 
@@ -834,9 +837,6 @@ def delete_detections(
     partition the recompute did not overwrite. Cost stays O(delete
     neighborhood), and a full-rebuild-equality test pins the semantics.
     """
-    import json
-    import shutil
-
     root = f"{out_dir}/detections"
     # SQL DELETE semantics under three-valued logic: a row is deleted iff
     # the predicate is TRUE; NULL-predicate rows must SURVIVE (a bare ~pred
@@ -851,39 +851,29 @@ def delete_detections(
         return dict(rows_deleted=0, tiles_rewritten=0, tiles_emptied=0)
 
     sub = det.filter(F.col("tile_id").isin(affected))
-    stage = f"{out_dir}/_stage/delete_{uuid.uuid4().hex[:12]}"
-    sub.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
-    survivors = staged.filter(~pred)
-    n_before = staged.count()
-    n_after = survivors.count()
+    with _staged(spark, sub, out_dir, "delete") as staged:
+        survivors = staged.filter(~pred)
+        n_before = staged.count()
+        n_after = survivors.count()
 
-    live = [r["tile_id"] for r in survivors.select("tile_id").distinct().collect()]
-    emptied = sorted(set(affected) - set(live))
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+        live = [r["tile_id"] for r in survivors.select("tile_id").distinct().collect()]
+        emptied = sorted(set(affected) - set(live))
         if live:
-            survivors.repartition("tile_id").write.mode("overwrite").partitionBy(
-                "tile_id"
-            ).parquet(root)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    for t in emptied:
-        shutil.rmtree(f"{root}/tile_id={t}", ignore_errors=True)
-    store_emptied = not detection_file_stats(out_dir)
+            _overwrite_tiles(survivors.repartition("tile_id"), root)
+        for t in emptied:
+            shutil.rmtree(f"{root}/tile_id={t}", ignore_errors=True)
+        store_emptied = not detection_file_stats(out_dir)
 
-    # reconcile the derived views from the post-delete store: the deleted
-    # rows are the touched set (their neighbors' verdicts may change). If
-    # the delete emptied the ENTIRE store there is nothing to reconcile
-    # (and the detections root is no longer readable) — the views are
-    # simply dropped with their tiles by the scrub below.
-    if os.path.isdir(f"{out_dir}/dedup_state") and n_after < n_before:
-        deleted = staged.filter(pred)
-        if not store_emptied:
-            update_dedup_incremental(spark, out_dir, deleted, _maybe_empty=True)
-        _scrub_deleted_state(spark, out_dir, deleted, affected, emptied)
-    shutil.rmtree(stage, ignore_errors=True)
+        # reconcile the derived views from the post-delete store: the
+        # deleted rows are the touched set (their neighbors' verdicts may
+        # change). If the delete emptied the ENTIRE store there is nothing
+        # to reconcile (and the detections root is no longer readable) —
+        # the views are simply dropped with their tiles by the scrub below.
+        if os.path.isdir(f"{out_dir}/dedup_state") and n_after < n_before:
+            deleted = staged.filter(pred)
+            if not store_emptied:
+                update_dedup_incremental(spark, out_dir, deleted, _maybe_empty=True)
+            _scrub_deleted_state(spark, out_dir, deleted, affected, emptied)
 
     # manifest repair for exactly the rewritten tiles
     mpath = _manifest_path(out_dir)
@@ -891,43 +881,22 @@ def delete_detections(
         man = pd.read_parquet(mpath)
         man = man[~man.tile_id.isin(affected)]
         if live:
-            lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
-            fresh = (
-                spark.read.parquet(root)
-                .filter(F.col("tile_id").isin(live))
-                .groupBy("tile_id")
-                .agg(
-                    F.min(lat).alias("lat_min"),
-                    F.max(lat).alias("lat_max"),
-                    F.min(lon).alias("lon_min"),
-                    F.max(lon).alias("lon_max"),
-                    F.count("*").alias("rows"),
-                )
-                .toPandas()
-            )
+            fresh = _tile_bounds(spark.read.parquet(root).filter(F.col("tile_id").isin(live)))
             man = pd.concat([man, fresh], ignore_index=True)
-        tmp = f"{mpath}.tmp-{uuid.uuid4().hex[:8]}"
-        man.to_parquet(tmp, index=False)
-        os.replace(tmp, mpath)
+        _write_manifest(man, mpath)
 
     # delete commit: its own snapshot record; prior snapshots become
     # unreadable (enforced in read_detections_as_of)
-    dbase, prior = _snap_entries(out_dir)
-    seq = (prior[-1]["seq"] if prior else dbase.get("last_seq", 0)) + 1
-    os.makedirs(f"{out_dir}/_snapshots", exist_ok=True)
-    with open(_snap_log(out_dir), "a") as f:
-        f.write(
-            json.dumps(
-                dict(
-                    seq=seq,
-                    run_id=f"delete-{uuid.uuid4().hex[:12]}",
-                    docs=0,
-                    rows=-(n_before - n_after),
-                    delete=True,
-                )
-            )
-            + "\n"
-        )
+    _append_snapshot(
+        out_dir,
+        _snap_entries(out_dir),
+        dict(
+            run_id=f"delete-{uuid.uuid4().hex[:12]}",
+            docs=0,
+            rows=-(n_before - n_after),
+            delete=True,
+        ),
+    )
     return dict(
         rows_deleted=n_before - n_after,
         tiles_rewritten=len(live),
@@ -950,8 +919,6 @@ def reprocess_granules(
     The lineage rewrite is driver-bounded metadata (one row per granule);
     beyond ~1e7 granules the same Iceberg-snapshot-diff out applies as for
     the resume frontier."""
-    import shutil
-
     ids = sorted(set(doc_ids))
     if not ids:
         return dict(reprocessed=0)
@@ -959,12 +926,12 @@ def reprocess_granules(
     delete_detections(spark, out_dir, f"doc_id IN ({quoted})")
     lin_path = _lineage_path(out_dir)
     keep = spark.read.parquet(lin_path).filter(~F.col("partition_key").isin(ids))
-    tmp = f"{out_dir}/_stage/lineage_{uuid.uuid4().hex[:12]}"
+    tmp = _stage_path(out_dir, "lineage")
     keep.write.mode("overwrite").parquet(tmp)
     # rename-aside swap: the exposure window is two directory renames, not
     # an O(files) rmtree of the live frontier (losing lineage would make
     # the next run re-append every granule as duplicates)
-    old = f"{out_dir}/_stage/lineage_old_{uuid.uuid4().hex[:12]}"
+    old = _stage_path(out_dir, "lineage_old")
     os.rename(lin_path, old)
     os.rename(tmp, lin_path)
     shutil.rmtree(old)
@@ -984,8 +951,6 @@ def _scrub_deleted_state(
     recompute overwrites only tiles with surviving ring1 rows), recompute
     the tiles rollup for those tiles, and drop partitions of emptied tiles.
     Bounded by the delete's tile footprint (<=648), never by the store."""
-    import shutil
-
     state_root = f"{out_dir}/dedup_state"
     tiles_root = f"{out_dir}/tiles"
     live_tiles = sorted(set(affected) - set(emptied))
@@ -993,23 +958,12 @@ def _scrub_deleted_state(
     if live_tiles:
         st = spark.read.parquet(state_root).filter(F.col("tile_id").isin(live_tiles))
         clean = st.join(F.broadcast(keys), STATE_KEY, "left_anti")
-        stage = f"{out_dir}/_stage/scrub_{uuid.uuid4().hex[:12]}"
-        clean.write.mode("overwrite").parquet(stage)
-        clean = spark.read.parquet(stage)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            clean.write.mode("overwrite").partitionBy("tile_id").parquet(state_root)
+        with _staged(spark, clean, out_dir, "scrub") as clean:
+            _overwrite_tiles(clean, state_root)
             det = spark.read.parquet(f"{out_dir}/detections").filter(
                 F.col("tile_id").isin(live_tiles)
             )
-            joined = det.join(clean.select(*STATE_KEY, "is_dup"), STATE_KEY, "inner")
-            pipeline.tiles(joined).write.mode("overwrite").partitionBy(
-                "tile_id"
-            ).parquet(tiles_root)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        shutil.rmtree(stage, ignore_errors=True)
+            _overwrite_tiles(_tiles_rollup(det, clean), tiles_root)
     for t in emptied:
         shutil.rmtree(f"{state_root}/tile_id={t}", ignore_errors=True)
         shutil.rmtree(f"{tiles_root}/tile_id={t}", ignore_errors=True)
@@ -1031,8 +985,6 @@ def remove_orphan_files(out_dir: str, grace_s: float = _ORPHAN_GRACE_S, dry_run:
     (mtime older than ``grace_s``) protects concurrently-running jobs,
     exactly like Iceberg's ``older_than``. Driver-side walk bounded by
     partition/metadata counts, not data size."""
-    import shutil
-
     now = time.time()
     victims: list[str] = []
 

@@ -21,10 +21,9 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from filda_spark import pipeline, runner
+from filda_spark import runner
 from filda_spark.namelist import make_namelist
 
 DOC_STREAM_SCHEMA = T.StructType(
@@ -134,19 +133,9 @@ def stream_ingest(
     nl = nl or make_namelist()
 
     def process_batch(batch_df, epoch_id: int) -> None:
-        hdr = F.from_json(F.element_at("spans", 1).getField("text"), pipeline.HEADER_SCHEMA)
-        night = batch_df.withColumn("header", hdr).filter(
-            ~F.col("header.DayNightFlag").eqNullSafe("Day")
-        )
-        todo = night.select("doc_id").distinct()
         # re-delivery guard: the lineage frontier is the granule-level
-        # exactly-once check (the stream checkpoint only dedups FILES);
-        # broadcast anti-join keeps the frontier off the driver
-        done = runner.done_doc_ids(spark, out_dir)
-        if done is not None:
-            todo = todo.join(
-                F.broadcast(done), todo.doc_id == done.partition_key, "left_anti"
-            )
+        # exactly-once check (the stream checkpoint only dedups FILES)
+        todo = runner.frontier(spark, out_dir, batch_df).distinct()
         n = todo.count()
         if not n:
             return

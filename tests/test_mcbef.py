@@ -248,3 +248,35 @@ def test_sensor_csv_seam(tmp_path):
         assert mcbef.band_radiance("M13", 320.0, 1.5, 20.0) != pytest.approx(base, rel=1e-12)
     finally:
         mcbef.set_sensor(orig)
+
+
+@pytest.mark.parametrize("raw", ["0,200,300", "2,200", "2;200;300", "2,x,300"])
+def test_env_depth_rejects_malformed(raw):
+    """FILDA_MCBEF_DEPTH is read at import in every process: a malformed
+    value must fail the import with a ValueError naming the variable, not
+    run a zero-chain sampler or die on a bare TypeError."""
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, FILDA_MCBEF_DEPTH=raw)
+    res = subprocess.run(
+        [sys.executable, "-c", "import filda_spark.mcbef"],
+        env=env, capture_output=True, text=True,
+    )
+    assert res.returncode != 0
+    assert "ValueError: FILDA_MCBEF_DEPTH" in res.stderr
+
+
+def test_env_depth_sets_sampler_depth():
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, FILDA_MCBEF_DEPTH="3,20,40")
+    res = subprocess.run(
+        [sys.executable, "-c",
+         "from filda_spark import mcbef; print(mcbef.N_CHAINS, mcbef.N_TUNE, mcbef.N_DRAWS, mcbef.N_SAMPLES)"],
+        env=env, capture_output=True, text=True, check=True,
+    )
+    assert res.stdout.split() == ["3", "20", "40", "120"]

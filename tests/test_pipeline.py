@@ -175,7 +175,7 @@ def test_bucketed_media_no_shuffle(spark, corpus, nl, tmp_path):
         got, base, KEY, cols=[c for c in base.columns if c in got.columns]
     )
 
-    pre = pipeline.detect_pre_metrics(spark, d, nl)
+    pre = pipeline.detect_granules(spark, d, nl)
     pre.write.mode("overwrite").format("noop").save()
     plan = pre._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange hashpartitioning")
