@@ -111,8 +111,8 @@ def fire_detections(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys, exactly as the production runner does. Per-session tempdir:
     # staging inside the shared corpus cache would race concurrent sessions.
     stage = os.path.join(_session_tmpdir("filda_stage_"), "detections")
-    runner.stage_fitted(spark, pipeline.detect_granules(spark, d, _nl(geom)), stage)
-    det = pipeline.enrich(spark, spark.read.parquet(stage), d)
+    fitted = runner.stage_fitted(spark, pipeline.detect_granules(spark, d, _nl(geom)), stage)
+    det = pipeline.enrich(spark, fitted, d)
     final = os.path.join(_session_tmpdir("filda_stage_"), "deduped")
     pipeline.dedup(det).write.mode("overwrite").parquet(final)
     _DET_STAGE_CACHE[key] = final

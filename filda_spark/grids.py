@@ -118,19 +118,72 @@ def cell_kring_dyn(cell: Column, kx: Column, ky: int = 1) -> Column:
     return F.array_compact(F.concat(*bands))
 
 
-def cell_center_lat(cell: Column) -> Column:
-    """Latitude of the cell centre (for ring expansion of bare cell sets)."""
-    lvl = cell_level(cell)
-    _, y = cell_xy(cell)
-    n = F.pow(F.lit(2.0), lvl.cast("double"))
-    return F.lit(90.0) - (y.cast("double") + F.lit(0.5)) / n * F.lit(180.0)
-
-
 def cell_encode_np(lat, lon, level: int):
     n = 1 << level
     x = np.clip(np.floor((np.asarray(lon) + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
     y = np.clip(np.floor((90.0 - np.asarray(lat)) / 180.0 * n), 0, n - 1).astype(np.int64)
     return np.int64(level) * np.int64(_LVL_SHIFT) + y * np.int64(_Y_SHIFT) + x
+
+
+def cell_level_np(cell) -> np.ndarray:
+    return np.asarray(cell, dtype=np.int64) // _LVL_SHIFT
+
+
+def cell_xy_np(cell) -> tuple[np.ndarray, np.ndarray]:
+    rem = np.asarray(cell, dtype=np.int64) % _LVL_SHIFT
+    return rem % _Y_SHIFT, rem // _Y_SHIFT
+
+
+def cell_center_lat_np(cell) -> np.ndarray:
+    """Latitude of the cell centre (for ring expansion of bare cell sets)."""
+    _, y = cell_xy_np(cell)
+    n = np.exp2(cell_level_np(cell).astype(np.float64))
+    return 90.0 - (y.astype(np.float64) + 0.5) / n * 180.0
+
+
+def lon_ring_halfwidth_np(lat, eps: float, level: int) -> np.ndarray:
+    """numpy twin of lon_ring_halfwidth (same expression order)."""
+    cell_w = 360.0 / (1 << level)
+    coslat = np.cos(np.radians(np.minimum(np.abs(np.asarray(lat, dtype=np.float64)) + eps, 89.9)))
+    return (np.floor(eps / (coslat * cell_w)) + 1).astype(np.int64)
+
+
+def cell_kring_dyn_np(cell, kx, ky: int = 1) -> np.ndarray:
+    """numpy twin of cell_kring_dyn, flattened over the input cells: every
+    (2*ky+1) x (2*kx+1) neighbour id of every cell (lon wraps, out-of-range
+    latitudes drop; a cell reached from two sources appears twice)."""
+    cell = np.asarray(cell, dtype=np.int64)
+    kx = np.broadcast_to(np.asarray(kx, dtype=np.int64), cell.shape)
+    width = 2 * kx + 1
+    src = np.repeat(np.arange(cell.size), width)
+    dx = np.arange(src.size) - np.repeat(np.cumsum(width) - width + kx, width)
+    lvl = cell_level_np(cell)[src]
+    x, y = (v[src] for v in cell_xy_np(cell))
+    n = np.left_shift(np.int64(1), lvl)
+    out = []
+    for dy in range(-ky, ky + 1):
+        ny = y + dy
+        ok = (ny >= 0) & (ny < n)
+        out.append((lvl * _LVL_SHIFT + ny * _Y_SHIFT + (x + dx + n) % n)[ok])
+    return np.concatenate(out)
+
+
+def cell_corner_tiles_np(cell) -> np.ndarray:
+    """Sorted hXXvYY tiles containing any point of the cells (all four
+    corners — a cell can straddle a 10-deg tile edge). Open cell edges are
+    pulled 1e-9 deg inside; the north edge belongs to the cell (cell_encode
+    floors 90 - lat), and on the equator it is the only point of the cell
+    in the tile north of it, so it is taken as is."""
+    x, y = (v.astype(np.float64) for v in cell_xy_np(cell))
+    n = np.exp2(cell_level_np(cell).astype(np.float64))
+    eps = 1e-9
+    lat_n = 90.0 - y / n * 180.0
+    lat_s = 90.0 - (y + 1) / n * 180.0 + eps
+    lon_w = x / n * 360.0 - 180.0 + eps
+    lon_e = (x + 1) / n * 360.0 - 180.0 - eps
+    lat = np.concatenate([lat_n, lat_n, lat_s, lat_s])
+    lon = np.concatenate([lon_w, lon_e, lon_w, lon_e])
+    return np.unique(pc_tile_name_np(lat, lon))
 
 
 # --- Plate-Carrée 10x10 deg tiles (hXXvYY) ----------------------------------
@@ -148,6 +201,15 @@ def pc_tile_hv(lat: Column, lon: Column) -> tuple[Column, Column]:
 def pc_tile_name(lat: Column, lon: Column) -> Column:
     hid, vid = pc_tile_hv(lat, lon)
     return F.format_string("h%02dv%02d", hid, vid)
+
+
+def pc_tile_name_np(lat, lon) -> np.ndarray:
+    """numpy twin of pc_tile_name."""
+    vid = 8 - np.floor(np.asarray(lat, dtype=np.float64) / 10.0).astype(np.int64)
+    hid = 18 + np.floor(np.asarray(lon, dtype=np.float64) / 10.0).astype(np.int64)
+    hv, inv = np.unique(np.stack([hid, vid]), axis=1, return_inverse=True)
+    names = np.array([f"h{h:02d}v{v:02d}" for h, v in hv.T.tolist()], dtype=object)
+    return names[inv.ravel()]
 
 
 def pc_tile_yx(lat: Column, lon: Column, cells: int = PC_TILE_CELLS) -> tuple[Column, Column]:

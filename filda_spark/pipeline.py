@@ -53,7 +53,7 @@ from filda_spark.namelist import make_namelist
 # longitudinal half-width grows with latitude (grids.lon_ring_halfwidth) —
 # a fixed k=1 ring would silently miss pairs above ~68.6 deg (valid input
 # reaches 85 deg).
-DEDUP_CELL_LEVEL = 14
+DEDUP_CELL_LEVEL = spatial.DEDUP_CELL_LEVEL
 
 _INT_COLS = {
     "FP_Line",
@@ -117,8 +117,30 @@ HEADER_SCHEMA = T.StructType(
 # ---------------------------------------------------------------------------
 
 
+# documents.parquet as written by fixtures.build_corpus: reading it with a
+# known schema skips Spark's schema-inference job on every batch
+DOCUMENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType()),
+        T.StructField(
+            "spans",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("kind", T.StringType()),
+                        T.StructField("media_ref", T.StringType()),
+                        T.StructField("offset", T.LongType()),
+                        T.StructField("text", T.StringType()),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
+
+
 def load_documents(spark: SparkSession, corpus_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{corpus_dir}/documents.parquet")
 
 
 def load_media(spark: SparkSession, corpus_dir: str) -> DataFrame:

@@ -10,9 +10,10 @@ Layout under ``--out``:
 - ``dedup_state/`` parquet partitioned by ``tile_id`` — one row per
   detection: (doc_id, FP_Line, FP_Sample, is_dup, dup_of, _cell). Updated
   INCREMENTALLY: a batch can only change verdicts for detections within the
-  dedup radius of its own rows, so each run recomputes the kRing
-  neighborhood of the batch's level-14 cells, stages the affected tiles and
-  swaps their partition directories in (no full-store shuffle per batch).
+  dedup radius of its own rows, so each run recomputes the verdicts in the
+  kRing neighborhood of the batch's level-14 cells, one cogrouped group
+  per affected tile, stages them and swaps the tiles' partition
+  directories in (no full-store shuffle per batch).
 - ``tiles/`` parquet partitioned by ``tile_id`` — fire-density rollup of
   the same affected tiles only.
 - ``lineage/`` parquet — one row per (run_id, stage, partition_key=doc_id):
@@ -32,9 +33,14 @@ queries sharing the session read, is never changed.
 
 Scale posture: the frontier is a broadcast semi/anti-join (doc_id count
 ~= 1e6/day at production scale — still broadcastable; beyond that it
-becomes an Iceberg snapshot diff). Per batch, the only non-map work is the
-neighborhood dedup shuffle, sized by the batch's spatial footprint — NOT by
-the store: O(|batch neighborhood|), constant as the store grows.
+becomes an Iceberg snapshot diff). Per batch, the only non-map work is one
+cogroup keyed by tile_id that pairs the detections of the batch's ring
+tiles with those tiles' old verdicts, plus the tiles rollup of its output:
+both are sized by the batch's spatial footprint — NOT by the store:
+O(|rows of the batch's tiles|), constant as the store grows. The ring
+cells, the batch's row count, manifest bounds and lineage rows are
+computed on the driver from the staged batch (a few thousand rows), not
+by Spark jobs.
 
 CLI (spark-submit friendly):
     spark-submit --py-files filda_spark.zip -m filda_spark.runner \
@@ -52,14 +58,46 @@ import shutil
 import time
 import uuid
 
+import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from filda_spark import grids, pipeline, spatial
 from filda_spark.namelist import make_namelist
 
 STATE_KEY = ["doc_id", "FP_Line", "FP_Sample"]
+# dedup_state as Spark reads it back (data columns, then the partition
+# column): re-reads with this schema skip the schema-inference job
+STATE_SCHEMA = T.StructType(
+    [pipeline.DET_SCHEMA[c] for c in STATE_KEY]
+    + [
+        T.StructField("is_dup", T.BooleanType()),
+        T.StructField("dup_of", T.StringType()),
+        T.StructField("_cell", T.LongType()),
+        T.StructField("tile_id", T.StringType()),
+    ]
+)
+_STATE_COLS = ["tile_id", *STATE_KEY, "is_dup", "dup_of", "_cell"]
+# the detection columns the incremental reconcile reads (verdicts + tiles)
+_RECONCILE_DET_SCHEMA = T.StructType(
+    [
+        pipeline.DET_SCHEMA[c]
+        for c in (*STATE_KEY, "FP_Latitude", "FP_Longitude", "FP_Power", "FP_confidence")
+    ]
+    + [T.StructField("cell_r7", T.LongType()), T.StructField("tile_id", T.StringType())]
+)
+# reconcile output: the state row plus what pipeline.tiles needs
+_RECONCILE_SCHEMA = T.StructType(
+    [STATE_SCHEMA[c] for c in _STATE_COLS]
+    + [_RECONCILE_DET_SCHEMA[c] for c in ("cell_r7", "FP_Power", "FP_confidence")]
+)
+LINEAGE_SCHEMA = (
+    "run_id string, stage string, partition_key string, rows_out long, "
+    "wall_s double, rows_per_sec double, status string"
+)
 _CELL_H_DEG = 180.0 / (1 << pipeline.DEDUP_CELL_LEVEL)
 
 
@@ -67,21 +105,53 @@ def _lineage_path(out_dir: str) -> str:
     return f"{out_dir}/lineage"
 
 
-def _parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+def _parquet_or_none(
+    spark: SparkSession, path: str, schema: T.StructType | str | None = None
+) -> DataFrame | None:
     """First-run probe: a local path that does not exist yet is expected
     state, not an error — checking existence keeps the py4j
     AnalysisException stack trace out of bench/driver logs. Non-local URIs
-    (s3a:// etc. on a real deployment) fall through to the read + except."""
+    (s3a:// etc. on a real deployment) fall through to the read + except.
+    A known ``schema`` skips the schema-inference job."""
     if "://" not in path and not os.path.exists(path):
         return None
     try:
-        return spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
     except Exception:
         return None
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _parquet_or_none(spark, _lineage_path(out_dir))
+    return _parquet_or_none(spark, _lineage_path(out_dir), LINEAGE_SCHEMA)
+
+
+# Spark writes each parquet file's Spark schema into its footer under this
+# key; its own schema inference reads the same entry
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_detections(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The detections store, read with the schema Spark wrote into a data
+    file's footer plus the ``tile_id`` partition column — what inference
+    would find, without its Spark job (every file is written from the same
+    enrich schema). Falls back to inference when no data file is found."""
+    root = f"{out_dir}/detections"
+    parts = sorted(os.listdir(root)) if os.path.isdir(root) else []
+    files = (
+        os.path.join(root, p, f)
+        for p in parts
+        if p.startswith("tile_id=")
+        for f in sorted(os.listdir(os.path.join(root, p)))
+        if f.endswith(".parquet") and not f.startswith(".")
+    )
+    first = next(files, None)
+    meta = (pq.read_schema(first).metadata or {}) if first else {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(root)
+    data = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    schema = T.StructType(data.fields + [T.StructField("tile_id", T.StringType())])
+    return spark.read.schema(schema).parquet(root)
 
 
 def done_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -110,16 +180,24 @@ def _stage_path(out_dir: str, kind: str) -> str:
     return f"{out_dir}/_stage/{kind}_{uuid.uuid4().hex[:12]}"
 
 
+def doc_frame(spark: SparkSession, doc_ids: list[str]) -> DataFrame:
+    """A driver-side doc_id list as a ``todo`` frame: a local relation, so
+    reading it back (``process_docs``) runs no job."""
+    ids = pd.DataFrame({"doc_id": pd.Series(doc_ids, dtype=object)})
+    return spark.createDataFrame(ids, "doc_id string")
+
+
 @contextlib.contextmanager
 def _staged(spark: SparkSession, df: DataFrame, out_dir: str, kind: str):
-    """Write ``df`` once to a staging parquet and yield its re-read, so the
-    block's re-references (semi-join reductions, self-joins, a rewrite of
-    the very partitions ``df`` reads) never re-run its lineage. The stage
-    is removed when the block completes; a crash leaves it to
+    """Write ``df`` once to a staging parquet and yield (its re-read, the
+    stage path), so the block's re-references (semi-join reductions,
+    self-joins, a rewrite of the very partitions ``df`` reads) never re-run
+    its lineage. The re-read reuses ``df``'s schema (no inference job).
+    The stage is removed when the block completes; a crash leaves it to
     ``remove_orphan_files``."""
     path = _stage_path(out_dir, kind)
     df.write.mode("overwrite").parquet(path)
-    yield spark.read.parquet(path)
+    yield spark.read.schema(df.schema).parquet(path), path
     shutil.rmtree(path, ignore_errors=True)
 
 
@@ -138,7 +216,8 @@ def _tiles_rollup(det: DataFrame, state: DataFrame) -> DataFrame:
 
 
 def _tile_bounds(det: DataFrame) -> pd.DataFrame:
-    """Per-tile lat/lon bounds and row count (<=648 rows to the driver)."""
+    """Per-tile lat/lon bounds and row count (<=648 rows to the driver);
+    ``_tile_bounds_np`` is the driver-side twin for a staged batch."""
     lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
     return (
         det.groupBy("tile_id")
@@ -153,44 +232,106 @@ def _tile_bounds(det: DataFrame) -> pd.DataFrame:
     )
 
 
+def _tile_bounds_np(lat: np.ndarray, lon: np.ndarray) -> pd.DataFrame:
+    """``_tile_bounds`` of a batch's coordinates, on the driver."""
+    pos = pd.DataFrame(dict(tile_id=grids.pc_tile_name_np(lat, lon), lat=lat, lon=lon))
+    return pos.groupby("tile_id", as_index=False).agg(
+        lat_min=("lat", "min"),
+        lat_max=("lat", "max"),
+        lon_min=("lon", "min"),
+        lon_max=("lon", "max"),
+        rows=("lat", "size"),
+    )
+
+
 def _det_cell(lat_col: str = "FP_Latitude", lon_col: str = "FP_Longitude"):
     return grids.cell_encode(F.col(lat_col), F.col(lon_col), pipeline.DEDUP_CELL_LEVEL)
 
 
-def _expand_cells(cells: DataFrame, eps: float = spatial.DEDUP_EPS_DEG) -> DataFrame:
+def _expand_cells(cells: np.ndarray, eps: float = spatial.DEDUP_EPS_DEG) -> np.ndarray:
     """All cells that can hold a detection within ``eps`` of a detection in
     one of the input cells: latitude-aware kRing of the cell set (margin =
     half a cell height, since the source row can sit anywhere in its cell;
     lon_ring_halfwidth adds the +eps partner-latitude margin itself)."""
-    lat_c = F.abs(grids.cell_center_lat(F.col("_cell"))) + F.lit(_CELL_H_DEG / 2.0)
-    kx = grids.lon_ring_halfwidth(lat_c, eps, pipeline.DEDUP_CELL_LEVEL)
-    return (
-        cells.select(F.explode(grids.cell_kring_dyn(F.col("_cell"), kx)).alias("_cell"))
-        .distinct()
-    )
+    lat_c = np.abs(grids.cell_center_lat_np(cells)) + _CELL_H_DEG / 2.0
+    kx = grids.lon_ring_halfwidth_np(lat_c, eps, pipeline.DEDUP_CELL_LEVEL)
+    return np.unique(grids.cell_kring_dyn_np(cells, kx))
 
 
-def _cell_tiles(cells: DataFrame) -> DataFrame:
-    """Candidate hXXvYY tiles containing any point of each cell (all four
-    corners — a cell can straddle a 10-deg tile edge)."""
-    lvl = grids.cell_level(F.col("_cell"))
-    x, y = grids.cell_xy(F.col("_cell"))
-    n = F.pow(F.lit(2.0), lvl.cast("double"))
-    eps = F.lit(1e-9)
-    lat_n = F.lit(90.0) - y.cast("double") / n * F.lit(180.0) - eps
-    lat_s = F.lit(90.0) - (y.cast("double") + 1) / n * F.lit(180.0) + eps
-    lon_w = x.cast("double") / n * F.lit(360.0) - F.lit(180.0) + eps
-    lon_e = (x.cast("double") + 1) / n * F.lit(360.0) - F.lit(180.0) - eps
+def _partner_tiles(eps: float) -> F.Column:
+    """Every tile a within-``eps`` partner of the row can lie in: the
+    tiles of the four corners of its eps box. The box's longitude
+    half-width is eps/cos of its poleward edge (as lon_ring_halfwidth,
+    capped at 89.9 deg) and every side carries a 1e-9 deg margin; the box
+    is far narrower than a 10-deg tile, so its corners hit every tile it
+    overlaps, the row's own tile included."""
+    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
+    margin = 1e-9
+    coslat = F.cos(F.radians(F.least(F.abs(lat) + F.lit(eps), F.lit(89.9))))
+    half_lon = F.lit(eps) / coslat + F.lit(margin)
+    half_lat = F.lit(eps + margin)
     corners = [
-        grids.pc_tile_name(la, lo)
-        for la in (lat_n, lat_s)
-        for lo in (lon_w, lon_e)
+        grids.pc_tile_name(lat + dy * half_lat, lon + dx * half_lon)
+        for dy in (-1, 1)
+        for dx in (-1, 1)
     ]
-    return cells.select(F.explode(F.array(*corners)).alias("t"))
+    return F.array_distinct(F.array(*corners))
+
+
+def _read_tiles(
+    spark: SparkSession, root: str, tiles: list[str], schema: T.StructType
+) -> DataFrame:
+    """The existing ``tile_id`` partitions of ``root`` among ``tiles``,
+    read with a known schema: no schema-inference job, and only those
+    partition directories are listed (static partition pruning)."""
+    paths = [f"{root}/tile_id={t}" for t in tiles if os.path.isdir(f"{root}/tile_id={t}")]
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", root).parquet(*paths)
+
+
+def _reconcile_tile(ring1: np.ndarray, eps: float):
+    """Cogroup body of the incremental reconcile for one tile: ``rows`` are
+    the tile's own detections plus every detection of a neighboring tile
+    whose eps box reaches into it; ``old`` is the tile's dedup_state.
+    Verdicts of the tile's rows in ``ring1`` cells are recomputed against
+    all of ``rows`` (which hold every within-eps partner of them); every
+    other row of the tile carries its old verdict forward, and a row with
+    no old verdict raises. A tile without ring1 rows emits nothing."""
+    out_cols = _RECONCILE_SCHEMA.fieldNames()
+
+    def reconcile(key, rows: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
+        home = rows.tile_id.to_numpy() == key[0]
+        redo = home & np.isin(rows._cell.to_numpy(), ring1)
+        if not redo.any():
+            return rows.iloc[:0].assign(is_dup=False, dup_of="")[out_cols]
+        is_dup, dup_of = spatial.knn_dedup_cells_np(
+            rows.doc_id.to_numpy(),
+            rows.FP_Latitude.to_numpy(),
+            rows.FP_Longitude.to_numpy(),
+            rows.FP_Power.to_numpy(),
+            rows.FP_Line.to_numpy(),
+            rows.FP_Sample.to_numpy(),
+            query=redo,
+            eps=eps,
+        )
+        fresh = rows[redo].assign(is_dup=is_dup, dup_of=dup_of)
+        kept = rows[home & ~redo].merge(
+            old[[*STATE_KEY, "is_dup", "dup_of"]], on=STATE_KEY, how="left", indicator=True
+        )
+        missing = int((kept.pop("_merge") != "both").sum())
+        if missing:
+            raise RuntimeError(
+                f"dedup_state of tile {key[0]} has no verdict for {missing} detections "
+                "outside the batch neighborhood"
+            )
+        return pd.concat([fresh[out_cols], kept[out_cols]], ignore_index=True)
+
+    return reconcile
 
 
 def _read_state(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _parquet_or_none(spark, f"{out_dir}/dedup_state")
+    return _parquet_or_none(spark, f"{out_dir}/dedup_state", STATE_SCHEMA)
 
 
 def _swap_tile_partitions(src: str, dst: str) -> list[str]:
@@ -213,28 +354,41 @@ def _swap_tile_partitions(src: str, dst: str) -> list[str]:
 
 
 def update_dedup_incremental(
-    spark: SparkSession, out_dir: str, batch: DataFrame, _maybe_empty: bool = False
+    spark: SparkSession,
+    out_dir: str,
+    batch: DataFrame,
+    _maybe_empty: bool = False,
+    touched: np.ndarray | None = None,
 ) -> None:
     """Reconcile dedup_state + tiles after appending ``batch`` (enriched
-    detection rows) to the store.
+    detection rows) to the store. ``touched``, when the caller already has
+    the batch's level-14 cells (``process_docs`` reads them from the staged
+    batch), saves collecting them from ``batch``.
 
     A new detection can only change is_dup/dup_of verdicts for detections
     within the dedup radius of itself, i.e. in the kRing (ring1) of the
     batch's cells; recomputing those verdicts needs candidate dominators one
     ring further out (ring2). So:
 
-      1. ring1 = expand(batch cells); ring2 = expand(ring1)
-      2. run pipeline.dedup on store rows in ring2 cells — verdicts for
-         ring1 rows are exact (all their within-eps partners are present)
-      3. dedup_state := carried-forward rows (affected tiles, outside
-         ring1) + recomputed ring1 rows, swapped into ONLY the affected
-         tile partitions
-      4. tiles := rollup of the affected tiles from store JOIN state,
-         dynamic-overwriting the same partitions
+      1. on the driver: ring1 = expand(batch cells), ring2 = expand(ring1),
+         and the candidate 10-deg tiles of each (numpy, no Spark job)
+      2. read the detections of the ring2 tiles (partition-pruned); each
+         row goes to every ring1 tile its eps box reaches (``_partner_tiles``)
+      3. ONE cogroup keyed by tile pairs those rows with the ring1 tiles'
+         old state: per tile, verdicts of its ring1 rows are recomputed
+         with ``spatial.knn_dedup_cells_np`` (the relation of
+         ``spatial.knn_dedup_np`` and ``pipeline.dedup``), every other row
+         of the tile keeps its old verdict
+      4. the output is staged once: its state columns are written
+         partitioned and swapped into ONLY the reconciled tiles'
+         dedup_state partitions, and ``pipeline.tiles`` of it
+         dynamic-overwrites the same tiles' rollup
 
-    Cost is O(|batch neighborhood|) regardless of store size — the full
-    rebuild the north rule's resume semantics would otherwise force on
-    every micro-batch."""
+    Cost is O(rows of the batch's tiles) regardless of store size — the
+    full rebuild the north rule's resume semantics would otherwise force
+    on every micro-batch. An append always reconciles at least its own
+    rows; only the delete path (``_maybe_empty``) may find nothing left to
+    reconcile, and then returns without a write."""
     old = _read_state(spark, out_dir)
     if old is None:
         # bulk load (no prior state): every cell is "touched" — the ring
@@ -243,77 +397,53 @@ def update_dedup_incremental(
         # themselves once the store outgrows the batch)
         # no prior state on disk -> no self-read hazard: write the state
         # partitions directly and reuse the materialized parquet for tiles
-        store = spark.read.parquet(f"{out_dir}/detections").withColumn("_cell", _det_cell())
-        new_state = pipeline.dedup(store).select(
-            "tile_id", *STATE_KEY, "is_dup", "dup_of", "_cell"
-        )
+        store = _read_detections(spark, out_dir).withColumn("_cell", _det_cell())
+        new_state = pipeline.dedup(store).select(*_STATE_COLS)
         new_state.write.mode("overwrite").partitionBy("tile_id").parquet(f"{out_dir}/dedup_state")
-        state = spark.read.parquet(f"{out_dir}/dedup_state")
+        state = _read_state(spark, out_dir)
         _tiles_rollup(store, state).write.mode("overwrite").partitionBy("tile_id").parquet(
             f"{out_dir}/tiles"
         )
         return
 
-    touched = batch.select(_det_cell().alias("_cell")).distinct()
-    ring1 = _expand_cells(touched)
-    ring2 = _expand_cells(ring1)
+    eps = spatial.DEDUP_EPS_DEG
+    if touched is None:
+        pos = batch.select("FP_Latitude", "FP_Longitude").toPandas()
+        touched = grids.cell_encode_np(pos.FP_Latitude, pos.FP_Longitude, pipeline.DEDUP_CELL_LEVEL)
+    touched = np.unique(touched)
+    if touched.size == 0:
+        return
+    ring1 = _expand_cells(touched, eps)
+    ring2 = _expand_cells(ring1, eps)
+    tiles1 = grids.cell_corner_tiles_np(ring1).tolist()
+    tiles2 = grids.cell_corner_tiles_np(ring2).tolist()
 
-    # static partition pruning: the store is partitioned by tile_id (10-deg
-    # Plate-Carree), so the candidate tiles of the ring2 cells — a small,
-    # geography-bounded set (<= 648 globally) — prune the scan to the
-    # batch's spatial footprint before any row is read. Collected as
-    # literals deliberately: unlike the doc_id frontier this set cannot
-    # grow with data volume.
-    tiles_aff = sorted(
-        r.t for r in _cell_tiles(ring2).select(F.col("t")).distinct().collect()
-    )
-    store = (
-        spark.read.parquet(f"{out_dir}/detections")
-        .filter(F.col("tile_id").isin(tiles_aff))
+    rows = (
+        _read_tiles(spark, f"{out_dir}/detections", tiles2, _RECONCILE_DET_SCHEMA)
         .withColumn("_cell", _det_cell())
+        .withColumn("_grp", F.explode(_partner_tiles(eps)))
+        .filter(F.col("_grp").isin(tiles1))
     )
-    sub = store.join(F.broadcast(ring2), "_cell", "left_semi")
-    sub_dd = pipeline.dedup(sub)
-    new_state = sub_dd.join(F.broadcast(ring1), "_cell", "left_semi").select(
-        "tile_id", *STATE_KEY, "is_dup", "dup_of", "_cell"
+    old = _read_tiles(spark, f"{out_dir}/dedup_state", tiles1, STATE_SCHEMA).select(
+        "tile_id", *STATE_KEY, "is_dup", "dup_of"
     )
-    # only the delete path can produce an empty touched neighborhood (an
-    # append's new_state always contains the batch's own rows); the guard
-    # re-executes the neighborhood plan, so it must stay off the per-batch
-    # append/streaming hot path
-    if _maybe_empty and new_state.isEmpty():
-        # nothing survives in the touched neighborhood (a pure delete with
-        # no remaining neighbors): no verdict can change, and staging an
-        # empty frame would write a schema-less parquet dir
-        return
-
-    affected_tiles = new_state.select("tile_id").distinct()
-    keep = (
-        old.join(F.broadcast(affected_tiles), "tile_id", "left_semi")
-        .join(F.broadcast(ring1), "_cell", "left_anti")
-        .select("tile_id", *STATE_KEY, "is_dup", "dup_of", "_cell")
+    reconciled = (
+        rows.groupBy("_grp")
+        .cogroup(old.groupBy("tile_id"))
+        .applyInPandas(_reconcile_tile(ring1, eps), schema=_RECONCILE_SCHEMA)
     )
-    merged = keep.unionByName(new_state)
-
-    # ONE partitioned stage write, then a driver-side per-tile directory
-    # swap into dedup_state. This replaces the former two-write chain
-    # (unpartitioned stage + dynamic-partition-overwrite re-write): the
-    # merged plan reads dedup_state so Spark cannot overwrite it in place,
-    # but the swap is bounded metadata work (<=648 tile dirs globally) —
-    # the parquet-layout analogue of an Iceberg manifest swap, under the
-    # same single-writer commit discipline as the snapshot log. The
-    # tile_id repartition keeps ~one file per tile (same reasoning as the
-    # detections append) on a shuffle of only the neighborhood rows.
-    stage = _stage_path(out_dir, "state")
-    merged.repartition("tile_id").write.mode("overwrite").partitionBy("tile_id").parquet(stage)
-    swapped = _swap_tile_partitions(stage, f"{out_dir}/dedup_state")
-    if not swapped:
-        return
-    merged = spark.read.parquet(f"{out_dir}/dedup_state").filter(
-        F.col("tile_id").isin(swapped)  # partition-pruned: only swapped dirs read
-    )
-    det_aff = store.filter(F.col("tile_id").isin(swapped))
-    _overwrite_tiles(_tiles_rollup(det_aff, merged), f"{out_dir}/tiles")
+    with _staged(spark, reconciled, out_dir, "reconcile") as (staged, _):
+        # each cogroup task holds whole tiles, so this write lands ~one
+        # file per tile without a repartition; the driver-side directory
+        # swap is the parquet-layout analogue of an Iceberg manifest swap
+        stage = _stage_path(out_dir, "state")
+        staged.select(*_STATE_COLS).write.mode("overwrite").partitionBy("tile_id").parquet(stage)
+        swapped = _swap_tile_partitions(stage, f"{out_dir}/dedup_state")
+        if not swapped:
+            if not _maybe_empty:
+                raise RuntimeError("incremental dedup reconciled none of the appended rows")
+            return
+        _overwrite_tiles(pipeline.tiles(staged), f"{out_dir}/tiles")
 
 
 def _mark(timings: dict | None, key: str, t0: float) -> float:
@@ -338,23 +468,32 @@ def process_docs(
     """Detect + enrich + append one batch of granules, reconcile dedup/tiles
     incrementally, then record lineage. Shared by the incremental runner and
     the streaming ingest. ``todo`` is a doc_id DataFrame (the frontier);
-    granules outside it are pruned before decode. ``n_docs``, when the
-    caller already counted the frontier (both call sites do), skips a
-    recount job.
+    granules outside it are pruned before decode. Its doc_ids are collected
+    once, up front (the detect's broadcast semi-join would pull them to the
+    driver anyway), and that list drives the detect filter, the lineage
+    rows and the snapshot's doc count; ``n_docs``, the count some callers
+    already have, is therefore not needed.
+
+    The batch's small metadata — row count, touched cells, manifest bounds,
+    per-granule lineage metrics — comes from driver-side Arrow reads of the
+    two staged parquets (a few thousand rows), not from Spark jobs.
 
     Lineage wall_s/rows_per_sec are TRUE per-granule detect-kernel timings
     measured inside the cogroup task (_detect_wall_s), not batch averages
     (north rule: per-partition rows/sec metrics)."""
     t = time.perf_counter()
-    pre = pipeline.detect_granules(spark, corpus_dir, nl, doc_filter=todo, n_docs=n_docs)
+    doc_ids = [r.doc_id for r in todo.select("doc_id").collect()]
+    pre = pipeline.detect_granules(
+        spark, corpus_dir, nl, doc_filter=doc_frame(spark, doc_ids), n_docs=len(doc_ids)
+    )
     # stage the detect output once: the fit and the lineage metrics both
     # re-reference it and must not re-run the decode+detect kernel
-    with _staged(spark, pre, out_dir, f"{run_id}_pre") as pre:
+    with _staged(spark, pre, out_dir, f"{run_id}_pre") as (pre, pre_path):
         t = _mark(timings, "decode_detect", t)
         stage = _stage_path(out_dir, run_id)
-        stage_fitted(spark, pre, stage)
+        batch = stage_fitted(spark, pre, stage)
         t = _mark(timings, "fit", t)
-        enriched = pipeline.enrich(spark, spark.read.parquet(stage), corpus_dir)
+        enriched = pipeline.enrich(spark, batch, corpus_dir)
         # cluster by tile before the partitioned append: without this every
         # task writes a file into every tile directory it touches (tasks x
         # tiles small files per batch — the commit, not the data, becomes
@@ -365,42 +504,22 @@ def process_docs(
         )
         t = _mark(timings, "enrich_append", t)
 
-        batch = spark.read.parquet(stage)
-        # row-group-metadata count: one cheap job that both gates the dedup
-        # reconcile AND supplies the snapshot row count
-        n_rows = batch.count()
-        if n_rows > 0:
-            update_dedup_incremental(spark, out_dir, batch)
+        pos = pq.read_table(stage, columns=["FP_Latitude", "FP_Longitude"])
+        lat = pos.column("FP_Latitude").to_numpy()
+        lon = pos.column("FP_Longitude").to_numpy()
+        if lat.size:
+            touched = grids.cell_encode_np(lat, lon, pipeline.DEDUP_CELL_LEVEL)
+            update_dedup_incremental(spark, out_dir, batch, touched=touched)
             t = _mark(timings, "dedup_tiles", t)
-            _update_manifest(out_dir, batch)
+            _update_manifest(out_dir, _tile_bounds_np(lat, lon))
             t = _mark(timings, "manifest", t)
 
-        # per-granule metrics off the staged detect rows (sentinel rows
-        # carry the timing for zero-detection granules and count 0 toward
-        # rows_out); Day-pruned granules in the frontier never decode ->
-        # wall_s 0.0
-        metrics = pre.groupBy("doc_id").agg(
-            F.max("_detect_wall_s").alias("_wall"),
-            F.sum(F.when(F.col("FP_Line") >= 0, 1).otherwise(0)).alias("_n"),
+        metrics = pq.read_table(pre_path, columns=["doc_id", "FP_Line", "_detect_wall_s"])
+        lineage = _lineage_rows(run_id, doc_ids, metrics.to_pandas())
+        spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
+            _lineage_path(out_dir)
         )
-        n = F.coalesce(F.col("_n"), F.lit(0))
-        wall = F.round(F.coalesce(F.col("_wall"), F.lit(0.0)), 4)
-        lineage = todo.select("doc_id").join(metrics, "doc_id", "left").select(
-            F.lit(run_id).alias("run_id"),
-            F.lit("detect").alias("stage"),
-            F.col("doc_id").alias("partition_key"),
-            n.cast("long").alias("rows_out"),
-            wall.alias("wall_s"),
-            (n / F.greatest(wall, F.lit(1e-9))).alias("rows_per_sec"),
-            F.lit("done").alias("status"),
-        )
-        lineage.write.mode("append").parquet(_lineage_path(out_dir))
-        # snapshot stats come free: docs == the frontier count the caller
-        # already has; rows == the staged-batch count above (sum of per-doc
-        # rows_out by construction) — no lineage re-aggregation job
-        if n_docs is None:
-            n_docs = todo.count()
-        _commit_snapshot(spark, out_dir, run_id, docs=int(n_docs), rows=int(n_rows))
+        _commit_snapshot(out_dir, run_id, docs=len(doc_ids), rows=int(lat.size))
         t = _mark(timings, "lineage_snapshot", t)
     shutil.rmtree(stage, ignore_errors=True)
     try:
@@ -409,13 +528,42 @@ def process_docs(
         pass
 
 
-def stage_fitted(spark: SparkSession, pre: DataFrame, path: str) -> None:
+def _lineage_rows(run_id: str, doc_ids: list[str], pre: pd.DataFrame) -> pd.DataFrame:
+    """One lineage row per frontier granule from its staged detect rows
+    (``pre``: doc_id, FP_Line, _detect_wall_s). Sentinel rows (FP_Line < 0)
+    carry the timing of zero-detection granules and count 0 toward
+    rows_out; Day-pruned granules in the frontier never decode -> wall_s
+    0.0. wall_s is rounded to 4 decimals before rows_per_sec divides by it."""
+    per_doc = (
+        pre.assign(_n=(pre.FP_Line >= 0).astype(np.int64))
+        .groupby("doc_id")
+        .agg(_wall=("_detect_wall_s", "max"), _n=("_n", "sum"))
+        .reindex(doc_ids)
+    )
+    n = per_doc._n.fillna(0).astype(np.int64).to_numpy()
+    wall = per_doc._wall.fillna(0.0).round(4).to_numpy()
+    return pd.DataFrame(
+        dict(
+            run_id=run_id,
+            stage="detect",
+            partition_key=pd.Series(doc_ids, dtype=object),
+            rows_out=n,
+            wall_s=wall,
+            rows_per_sec=n / np.maximum(wall, 1e-9),
+            status="done",
+        )
+    )
+
+
+def stage_fitted(spark: SparkSession, pre: DataFrame, path: str) -> DataFrame:
     """Fit the real rows of ``pipeline.detect_granules`` output and stage
     them to parquet WITH the enrich join keys: enrich's two semi-join
     key-set jobs then read 4 pruned int columns from this parquet instead
-    of re-running the sinusoidal pandas UDF per job."""
-    det = pipeline.fit_detections(spark, pre)
-    pipeline.enrich_keys(det).write.mode("overwrite").parquet(path)
+    of re-running the sinusoidal pandas UDF per job. Returns the stage's
+    re-read with the writer's schema (no inference job)."""
+    det = pipeline.enrich_keys(pipeline.fit_detections(spark, pre))
+    det.write.mode("overwrite").parquet(path)
+    return spark.read.schema(det.schema).parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -428,17 +576,14 @@ def _manifest_path(out_dir: str) -> str:
     return f"{out_dir}/_manifest/partition_stats.parquet"
 
 
-def _update_manifest(out_dir: str, batch: DataFrame) -> None:
-    """Merge the batch's per-tile column bounds into the partition-stats
-    manifest: (tile_id, lat/lon min-max, rows). One agg over the staged
-    batch (<=648 result rows globally), then a driver-side atomic replace —
-    the same single-writer metadata commit the snapshot log uses. On the
-    APPEND path bounds are merge-only (compaction preserves rows), so they
-    only ever widen; the one shrinking operation, ``delete_detections``,
-    recomputes the rows of exactly the tiles it rewrites."""
-    stats = _tile_bounds(
-        batch.withColumn("tile_id", grids.pc_tile_name(F.col("FP_Latitude"), F.col("FP_Longitude")))
-    )
+def _update_manifest(out_dir: str, stats: pd.DataFrame) -> None:
+    """Merge a batch's per-tile column bounds (``_tile_bounds_np``) into
+    the partition-stats manifest: (tile_id, lat/lon min-max, rows), a
+    driver-side atomic replace — the same single-writer metadata commit the
+    snapshot log uses. On the APPEND path bounds are merge-only (compaction
+    preserves rows), so they only ever widen; the one shrinking operation,
+    ``delete_detections``, recomputes the rows of exactly the tiles it
+    rewrites."""
     if stats.empty:
         return
     path = _manifest_path(out_dir)
@@ -480,12 +625,11 @@ def read_detections_bbox(
     Exactly the Iceberg manifest -> partition prune -> row-group skip
     ladder, on the plain-parquet layout."""
     path = _manifest_path(out_dir)
-    root = f"{out_dir}/detections"
     lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
     pred = (
         (lat >= lat_min) & (lat <= lat_max) & (lon >= lon_min) & (lon <= lon_max)
     )
-    det = spark.read.parquet(root)
+    det = _read_detections(spark, out_dir)
     if not os.path.exists(path):
         return det.filter(pred)
     man = pd.read_parquet(path)
@@ -507,7 +651,7 @@ def _snap_log(out_dir: str) -> str:
     return f"{out_dir}/_snapshots/log.jsonl"
 
 
-def _commit_snapshot(spark: SparkSession, out_dir: str, run_id: str, docs: int, rows: int) -> None:
+def _commit_snapshot(out_dir: str, run_id: str, docs: int, rows: int) -> None:
     """Append one commit record after a batch lands: (seq, run_id, new
     granules, rows appended). Driver-side single-writer append — the same
     role Iceberg's metadata commit plays; granule (doc_id) granularity
@@ -519,21 +663,19 @@ def _commit_snapshot(spark: SparkSession, out_dir: str, run_id: str, docs: int, 
     but in no snapshot — permanently invisible to time travel. Each commit
     therefore folds any such orphaned lineage run_ids into itself
     (``also_runs``): the next snapshot's membership equals the store
-    content again. Detection is one column-pruned DISTINCT over the
-    lineage run_id column; counts are passed in by the caller so the
-    commit never re-scans the full lineage store per batch."""
+    content again. Detection is a driver-side Arrow read of only the
+    lineage run_id column (no Spark job); counts are passed in by the
+    caller. It still reads the whole lineage history on every commit — a
+    commit-intent file written before the data would bound it by the
+    batch instead."""
     base, prior = _snap_entries(out_dir)
     known = set(base.get("run_ids", [])) | {run_id}
     for s in prior:
         known.add(s["run_id"])
         known.update(s.get("also_runs", []))
-    lin_runs = {
-        r["run_id"]
-        for r in spark.read.parquet(_lineage_path(out_dir))
-        .select("run_id")
-        .distinct()
-        .collect()
-    }
+    lin_runs = set(
+        pq.read_table(_lineage_path(out_dir), columns=["run_id"]).column("run_id").to_pylist()
+    )
     rec = dict(run_id=run_id, docs=int(docs), rows=int(rows))
     orphans = sorted(lin_runs - known)
     if orphans:
@@ -601,12 +743,12 @@ def read_detections_as_of(spark: SparkSession, out_dir: str, run_id: str) -> Dat
             run_ids.append(s["run_id"])
             run_ids.extend(s.get("also_runs", []))
     members = (
-        spark.read.parquet(_lineage_path(out_dir))
+        read_lineage(spark, out_dir)
         .filter(F.col("run_id").isin(run_ids) & (F.col("stage") == "detect"))
         .select(F.col("partition_key").alias("doc_id"))
         .distinct()
     )
-    det = spark.read.parquet(f"{out_dir}/detections")
+    det = _read_detections(spark, out_dir)
     return det.join(F.broadcast(members), "doc_id", "left_semi")
 
 
@@ -671,13 +813,12 @@ def run_incremental(
     t0 = time.perf_counter()
 
     todo = frontier(spark, out_dir, pipeline.load_documents(spark, corpus_dir))
-    n_new = todo.count()
+    doc_ids = [r.doc_id for r in todo.collect()]
     _mark(timings, "frontier", t0)
-    if n_new:
-        process_docs(
-            spark, corpus_dir, out_dir, todo, nl, run_id, n_docs=n_new, timings=timings
-        )
-    return dict(run_id=run_id, new_docs=n_new)
+    if doc_ids:
+        todo = doc_frame(spark, doc_ids)
+        process_docs(spark, corpus_dir, out_dir, todo, nl, run_id, timings=timings)
+    return dict(run_id=run_id, new_docs=len(doc_ids))
 
 
 def detection_file_stats(out_dir: str) -> dict[str, int]:
@@ -734,7 +875,7 @@ def compact_detections(
     root = f"{out_dir}/detections"
     det = spark.read.parquet(root).filter(F.col("tile_id").isin(todo))
     # stage: the rewrite reads the same partitions it overwrites
-    with _staged(spark, det, out_dir, "compact") as staged:
+    with _staged(spark, det, out_dir, "compact") as (staged, _):
         counts = {
             r["tile_id"]: r["n"]
             for r in staged.groupBy("tile_id").agg(F.count("*").alias("n")).collect()
@@ -786,7 +927,7 @@ def zorder_detections(
         return result
     root = f"{out_dir}/detections"
     det = spark.read.parquet(root).filter(F.col("tile_id").isin(todo))
-    with _staged(spark, det, out_dir, "zorder") as staged:
+    with _staged(spark, det, out_dir, "zorder") as (staged, _):
         total = staged.count()
         n_parts = max(len(todo), -(-total // target_rows_per_file))
         clustered = (
@@ -851,7 +992,7 @@ def delete_detections(
         return dict(rows_deleted=0, tiles_rewritten=0, tiles_emptied=0)
 
     sub = det.filter(F.col("tile_id").isin(affected))
-    with _staged(spark, sub, out_dir, "delete") as staged:
+    with _staged(spark, sub, out_dir, "delete") as (staged, _):
         survivors = staged.filter(~pred)
         n_before = staged.count()
         n_after = survivors.count()
@@ -956,9 +1097,9 @@ def _scrub_deleted_state(
     live_tiles = sorted(set(affected) - set(emptied))
     keys = deleted.select(*STATE_KEY).distinct()
     if live_tiles:
-        st = spark.read.parquet(state_root).filter(F.col("tile_id").isin(live_tiles))
+        st = _read_state(spark, out_dir).filter(F.col("tile_id").isin(live_tiles))
         clean = st.join(F.broadcast(keys), STATE_KEY, "left_anti")
-        with _staged(spark, clean, out_dir, "scrub") as clean:
+        with _staged(spark, clean, out_dir, "scrub") as (clean, _):
             _overwrite_tiles(clean, state_root)
             det = spark.read.parquet(f"{out_dir}/detections").filter(
                 F.col("tile_id").isin(live_tiles)
@@ -1047,7 +1188,7 @@ def remove_orphan_files(out_dir: str, grace_s: float = _ORPHAN_GRACE_S, dry_run:
 
 
 def read_results(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    det = spark.read.parquet(f"{out_dir}/detections")
+    det = _read_detections(spark, out_dir)
     state = _read_state(spark, out_dir)
     if state is not None:
         det = det.join(state.select(*STATE_KEY, "is_dup", "dup_of"), STATE_KEY, "left")

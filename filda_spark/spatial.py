@@ -19,7 +19,16 @@ from __future__ import annotations
 
 import numpy as np
 
-from filda_spark.grids import LEVEL_R7, LEVEL_R8, LEVEL_R9, cell_encode_np, pc_tile_np
+from filda_spark.grids import (
+    _LVL_SHIFT,
+    _Y_SHIFT,
+    LEVEL_R7,
+    LEVEL_R8,
+    LEVEL_R9,
+    cell_encode_np,
+    cell_xy_np,
+    pc_tile_np,
+)
 
 
 def point_in_polygon_np(lat, lon, poly_lat, poly_lon):
@@ -251,6 +260,9 @@ def encode_cells_np(det: dict) -> dict:
 
 
 DEDUP_EPS_DEG = 0.008  # ~ one M pixel across the re-observation shift
+# dedup neighbourhood cells: level 14 (~0.011 deg tall > eps, so a within-eps
+# partner is at most one cell row away)
+DEDUP_CELL_LEVEL = 14
 
 
 def knn_dedup_np(doc_id, lat, lon, power, line, sample, eps: float = DEDUP_EPS_DEG):
@@ -263,7 +275,8 @@ def knn_dedup_np(doc_id, lat, lon, power, line, sample, eps: float = DEDUP_EPS_D
 
     Single-node reference implementation (O(n^2), fine at fixture scale);
     the engine computes the identical relation with a cell-neighborhood
-    shuffle join (kRing duplicate -> per-cell pairs) — see pipeline.dedup.
+    shuffle join (kRing duplicate -> per-cell pairs) — see pipeline.dedup —
+    and, per tile of an incremental append, with ``knn_dedup_cells_np``.
     """
     doc_id = np.asarray(doc_id)
     lat = np.asarray(lat, dtype=np.float64)
@@ -294,6 +307,80 @@ def knn_dedup_np(doc_id, lat, lon, power, line, sample, eps: float = DEDUP_EPS_D
             is_dup[i] = True
             j = best[1]
             dup_of[i] = f"{doc_id[j]}:{keys[j][1]}:{keys[j][2]}"
+    return is_dup, dup_of.astype(str)
+
+
+def knn_dedup_cells_np(
+    doc_id, lat, lon, power, line, sample, query=None, eps: float = DEDUP_EPS_DEG,
+    level: int = DEDUP_CELL_LEVEL,
+):
+    """``knn_dedup_np``'s verdicts for the ``query`` rows (bool mask or
+    indices; default all) against every row, cell-bucketed: rows are
+    sorted by level-``level`` cell id, which orders by (cell row, cell
+    column), so each query row's candidates in one cell row are one
+    ``searchsorted`` range of half-width floor(eps/(cos(lat)*cell width))+2
+    columns (an eps-box strictly covering the relation; no longitude wrap,
+    as the relation has none). Cost is O(candidate pairs), not O(n^2).
+    Pair test, priority key and ``dup_of`` format are knn_dedup_np's, in
+    the same expression order, so the result is bit-identical."""
+    doc_id = np.asarray(doc_id)
+    lat = np.asarray(lat, dtype=np.float64)
+    lon = np.asarray(lon, dtype=np.float64)
+    power = np.asarray(power, dtype=np.float64)
+    line = np.asarray(line)
+    sample = np.asarray(sample)
+    q = np.arange(lat.size) if query is None else np.asarray(query)
+    if q.dtype == bool:
+        q = np.flatnonzero(q)
+    is_dup = np.zeros(q.size, dtype=bool)
+    dup_of = np.full(q.size, "", dtype=object)
+    if q.size == 0:
+        return is_dup, dup_of.astype(str)
+    cells = cell_encode_np(lat, lon, level)
+    order = np.argsort(cells, kind="stable")
+    sorted_cells = cells[order]
+    n = 1 << level
+    x, y = cell_xy_np(cells[q])
+    coslat = np.cos(np.radians(lat))
+    with np.errstate(divide="ignore"):
+        kx = np.floor(eps / (np.abs(coslat[q]) * (360.0 / n))) + 2
+    kx = np.minimum(kx, n).astype(np.int64)
+    x0, x1 = np.maximum(x - kx, 0), np.minimum(x + kx, n - 1)
+    los, his = [], []
+    for dy in (-1, 0, 1):
+        row = np.int64(level) * _LVL_SHIFT + (y + dy) * _Y_SHIFT
+        lo = np.searchsorted(sorted_cells, row + x0, "left")
+        hi = np.searchsorted(sorted_cells, row + x1, "right")
+        ok = (y + dy >= 0) & (y + dy < n)
+        los.append(lo)
+        his.append(np.where(ok, hi, lo))
+    lo, cnt = np.concatenate(los), np.concatenate(his) - np.concatenate(los)
+    qi = np.repeat(np.tile(np.arange(q.size), 3), cnt)
+    j = order[np.repeat(lo, cnt) + np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)]
+    i = q[qi]
+
+    dlat = lat[j] - lat[i]
+    dlon = (lon[j] - lon[i]) * coslat[i]
+    near = (dlat * dlat + dlon * dlon) <= eps * eps
+    _, doc = np.unique(doc_id, return_inverse=True)
+    doc = doc.ravel()
+    negpw = -np.where(np.isnan(power), -np.inf, power)
+    # keys of different docs never tie, so "strictly smaller key" reduces
+    # to (power, doc); line/sample only order dominators within one doc
+    dom = near & (doc[j] != doc[i]) & (
+        (negpw[j] < negpw[i]) | ((negpw[j] == negpw[i]) & (doc[j] < doc[i]))
+    )
+    qi, j = qi[dom], j[dom]
+    o = np.lexsort((sample[j], line[j], doc[j], negpw[j], qi))
+    qi, j = qi[o], j[o]
+    first = np.ones(qi.size, dtype=bool)
+    first[1:] = qi[1:] != qi[:-1]
+    qi, j = qi[first], j[first]
+    is_dup[qi] = True
+    dup_of[qi] = [
+        f"{d}:{ln}:{sm}"
+        for d, ln, sm in zip(doc_id[j].tolist(), line[j].tolist(), sample[j].tolist())
+    ]
     return is_dup, dup_of.astype(str)
 
 

@@ -11,10 +11,12 @@ construction, and the streaming checkpoint + the lineage table give
 exactly-once granule processing across restarts.
 
 Late/duplicate granules need no watermark: the per-batch incremental dedup
-reconciliation (runner.update_dedup_incremental — kRing neighborhood of the
-batch's cells only, never the full store) is the event-time handling (a late
-granule can demote earlier detections to duplicates, which windowed
-streaming state could not express cheaply)."""
+reconciliation is the event-time handling (a late granule can demote
+earlier detections to duplicates, which windowed streaming state could not
+express cheaply). runner.update_dedup_incremental derives the kRing
+neighborhood of the batch's cells on the driver and reconciles it in one
+cogroup keyed by tile, reading only the tiles that neighborhood touches,
+never the full store."""
 
 from __future__ import annotations
 
@@ -23,28 +25,8 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from filda_spark import runner
+from filda_spark import pipeline, runner
 from filda_spark.namelist import make_namelist
-
-DOC_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("kind", T.StringType()),
-                        T.StructField("text", T.StringType()),
-                        T.StructField("media_ref", T.StringType()),
-                        T.StructField("offset", T.LongType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
 
 # ---------------------------------------------------------------------------
 # Stateful hotspot tracker (applyInPandasWithState)
@@ -135,16 +117,16 @@ def stream_ingest(
     def process_batch(batch_df, epoch_id: int) -> None:
         # re-delivery guard: the lineage frontier is the granule-level
         # exactly-once check (the stream checkpoint only dedups FILES)
-        todo = runner.frontier(spark, out_dir, batch_df).distinct()
-        n = todo.count()
-        if not n:
+        doc_ids = [r.doc_id for r in runner.frontier(spark, out_dir, batch_df).distinct().collect()]
+        if not doc_ids:
             return
         run_id = f"stream-{epoch_id}-{uuid.uuid4().hex[:8]}"
         # process_docs reconciles dedup_state + tiles incrementally per
-        # micro-batch (kRing neighborhood of the batch only)
-        runner.process_docs(spark, corpus_dir, out_dir, todo, nl, run_id, n_docs=n)
+        # micro-batch (the tiles of the batch's kRing neighborhood only)
+        todo = runner.doc_frame(spark, doc_ids)
+        runner.process_docs(spark, corpus_dir, out_dir, todo, nl, run_id)
 
-    stream = spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(stream_dir)
+    stream = spark.readStream.schema(pipeline.DOCUMENTS_SCHEMA).parquet(stream_dir)
     writer = (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", f"{out_dir}/_stream_checkpoint")

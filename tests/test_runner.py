@@ -160,26 +160,97 @@ def test_csv_sink_roundtrip(spark, tmp_path):
     assert np.array_equal(back.FP_Power.to_numpy(), ref.FP_Power.to_numpy(), equal_nan=True)
 
 
-def test_expand_cells_high_latitude(spark):
+def test_expand_cells_high_latitude():
     """_expand_cells must reach the partner cell of a within-eps pair even
     at 84N where eps of corrected distance spans several level-14 cells."""
-    from pyspark.sql import functions as F
-
-    from filda_spark import grids, runner, spatial
+    from filda_spark import grids, spatial
 
     lat = 84.0
     eps = spatial.DEDUP_EPS_DEG
     dlon = 0.0075 / np.cos(np.radians(lat))
-    a = spark.createDataFrame(pd.DataFrame(dict(lat=[lat], lon=[-40.0])))
-    cells_a = a.select(
-        grids.cell_encode(F.col("lat"), F.col("lon"), 14).alias("_cell")
-    )
+    cells_a = grids.cell_encode_np([lat], [-40.0], 14)
     ring = runner._expand_cells(cells_a, eps)
-    partner = a.select(
-        grids.cell_encode(F.col("lat"), F.col("lon") + F.lit(dlon), 14).alias("_cell")
-    )
-    hit = partner.join(ring, "_cell", "left_semi").count()
+    partner = grids.cell_encode_np([lat], [-40.0 + dlon], 14)
+    hit = int(np.isin(partner, ring).sum())
     assert hit == 1
+
+
+def _synthetic_detections(rng, doc: str, n: int, lat0: float, lon0: float, spread: float):
+    """Detection rows with the columns the dedup state and tiles read."""
+    return pd.DataFrame(
+        dict(
+            doc_id=doc,
+            FP_Line=np.arange(n, dtype=np.int32),
+            FP_Sample=rng.integers(0, 3000, n).astype(np.int32),
+            FP_Latitude=lat0 + rng.uniform(-spread, spread, n),
+            FP_Longitude=lon0 + rng.uniform(-spread, spread, n),
+            FP_Power=rng.choice([1.0, 2.5, 2.5, np.nan, 7.0, 30.0], n),
+            FP_confidence=rng.choice([7, 8, 9], n).astype(np.int32),
+        )
+    )
+
+
+def test_incremental_append_across_tile_edge(spark, tmp_path):
+    """An append at the corner of four 10-deg tiles: its ring crosses both
+    tile edges, so verdicts flip in tiles the batch's own rows may not sit
+    in. dedup_state must equal a full pipeline.dedup rebuild exactly and the
+    tiles view's counts and maxima must match exactly; a tile outside the
+    ring keeps its rows."""
+    from pyspark.sql import functions as F
+
+    from filda_spark import grids, pipeline
+
+    rng = np.random.default_rng(11)
+    out = str(tmp_path / "out_edge")
+    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
+
+    def land(pdf):
+        df = spark.createDataFrame(pdf).withColumns(
+            {
+                "cell_r7": grids.cell_encode(lat, lon, grids.LEVEL_R7),
+                "tile_id": grids.pc_tile_name(lat, lon),
+            }
+        )
+        df.write.mode("append").partitionBy("tile_id").parquet(f"{out}/detections")
+        return df
+
+    base = pd.concat(
+        [_synthetic_detections(rng, f"base{i}", 120, 10.0, 20.0, 0.03) for i in range(3)]
+        + [_synthetic_detections(rng, "far", 40, 15.0, 35.0, 0.01)]
+    )
+    runner.update_dedup_incremental(spark, out, land(base))  # bulk: no prior state
+    batch = pd.concat(
+        [_synthetic_detections(rng, f"new{i}", 50, 10.0, 20.0, 0.012) for i in range(2)]
+    )
+    assert (batch.FP_Latitude < 10.0).any() and (batch.FP_Longitude < 20.0).any()
+    runner.update_dedup_incremental(spark, out, land(batch))
+
+    got = (
+        runner.read_results(spark, out)["detections"]
+        .select(*KEY, "is_dup", "dup_of")
+        .toPandas()
+    )
+    inferred = spark.read.parquet(f"{out}/detections")
+    assert runner._read_detections(spark, out).schema == inferred.schema
+    full = pipeline.dedup(inferred)
+    ref = full.select(*KEY, "is_dup", "dup_of").toPandas()
+    got, ref = _canon(got), _canon(ref)
+    assert len(got) == len(ref) == len(base) + len(batch)
+    assert ref.is_dup.sum() > 0
+    assert got.is_dup.tolist() == ref.is_dup.tolist()
+    assert got.dup_of.tolist() == ref.dup_of.tolist()
+
+    tkey = ["tile_id", "cell_r7"]
+    tiles_got = (
+        runner.read_results(spark, out)["tiles"].toPandas().sort_values(tkey).reset_index(drop=True)
+    )
+    tiles_ref = pipeline.tiles(full).toPandas().sort_values(tkey).reset_index(drop=True)
+    assert len(set(tiles_got.tile_id)) == 5  # four corner tiles + the far one
+    assert tiles_got[tkey].astype(str).values.tolist() == tiles_ref[tkey].astype(str).values.tolist()
+    assert tiles_got.n_fires.tolist() == tiles_ref.n_fires.tolist()
+    got_max, ref_max = tiles_got.max_frp.to_numpy(), tiles_ref.max_frp.to_numpy()
+    assert np.array_equal(got_max, ref_max, equal_nan=True)
+    assert np.allclose(tiles_got.total_frp, tiles_ref.total_frp, equal_nan=True)
 
 
 def test_lineage_wall_times_are_per_granule(spark, corpus, nl, tmp_path):
