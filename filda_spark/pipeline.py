@@ -38,9 +38,11 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from filda_spark import grids, kernels, oracle, spatial
 from filda_spark.functions import graph
@@ -552,8 +554,12 @@ def _broadcast_polygons(spark: SparkSession, path: str, id_key: str):
 def enrich(spark: SparkSession, det: DataFrame, corpus_dir: str) -> DataFrame:
     """Land cover (sinusoidal equi-join, water override 17), peatland
     (Plate-Carree equi-join), gas-flare PIP, qcell/tile encodes."""
-    lc = spark.read.parquet(f"{corpus_dir}/land_cover.parquet")
-    peat = spark.read.parquet(f"{corpus_dir}/peatland.parquet")
+    # read with the schema in each file's footer: what inference finds
+    # (pinned by test), without its Spark job per batch
+    lc, peat = (
+        spark.read.schema(from_arrow_schema(pq.read_schema(p))).parquet(p)
+        for p in (f"{corpus_dir}/land_cover.parquet", f"{corpus_dir}/peatland.parquet")
+    )
     polys_bc = _broadcast_polygons(spark, f"{corpus_dir}/gas_flare_polygons.parquet", "flare_id")
     wp = f"{corpus_dir}/water_polygons.parquet"
     water_bc = _broadcast_polygons(spark, wp, "water_id") if os.path.exists(wp) else None

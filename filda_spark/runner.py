@@ -8,12 +8,11 @@ Layout under ``--out``:
   append-only, one commit per run; ``compact_detections`` is the
   small-file maintenance pass (the ``rewrite_data_files`` analogue).
 - ``dedup_state/`` parquet partitioned by ``tile_id`` — one row per
-  detection: (doc_id, FP_Line, FP_Sample, is_dup, dup_of, _cell). Updated
-  INCREMENTALLY: a batch can only change verdicts for detections within the
-  dedup radius of its own rows, so each run recomputes the verdicts in the
-  kRing neighborhood of the batch's level-14 cells, one cogrouped group
-  per affected tile, stages them and swaps the tiles' partition
-  directories in (no full-store shuffle per batch).
+  detection: (doc_id, FP_Line, FP_Sample, is_dup, dup_of, _cell). ONE
+  reconcile writes it for bulk loads, appends and deletes: a change can
+  only alter verdicts within the dedup radius of the changed rows, so it
+  recomputes the kRing neighborhood of their level-14 cells, one
+  cogrouped group per affected tile, and swaps those tiles' partitions in.
 - ``tiles/`` parquet partitioned by ``tile_id`` — fire-density rollup of
   the same affected tiles only.
 - ``lineage/`` parquet — one row per (run_id, stage, partition_key=doc_id):
@@ -26,21 +25,20 @@ Layout under ``--out``:
   time-travel read (granule-membership snapshots, compaction-proof).
 
 Every rewrite of existing tile partitions (tiles, compaction, z-order,
-delete, post-delete scrub) is a dynamic partition overwrite requested per
-write (the ``partitionOverwriteMode`` writer option): only the partitions
+delete) is a dynamic partition overwrite requested per write (the
+``partitionOverwriteMode`` writer option): only the partitions
 the write produces are replaced, and the session conf, which other
 queries sharing the session read, is never changed.
 
 Scale posture: the frontier is a broadcast semi/anti-join (doc_id count
 ~= 1e6/day at production scale — still broadcastable; beyond that it
-becomes an Iceberg snapshot diff). Per batch, the only non-map work is one
-cogroup keyed by tile_id that pairs the detections of the batch's ring
-tiles with those tiles' old verdicts, plus the tiles rollup of its output:
-both are sized by the batch's spatial footprint — NOT by the store:
-O(|rows of the batch's tiles|), constant as the store grows. The ring
-cells, the batch's row count, manifest bounds and lineage rows are
-computed on the driver from the staged batch (a few thousand rows), not
-by Spark jobs.
+becomes an Iceberg snapshot diff). Per commit (bulk load, append or
+delete), the only non-map work is one cogroup keyed by tile_id that pairs
+the detections of the changed rows' ring tiles with those tiles' old
+verdicts, plus the tiles rollup of its output: O(|rows of the changed
+tiles|), constant as the store grows. The ring cells, the batch's row
+count, manifest bounds and lineage rows are computed on the driver from
+the staged batch (a few thousand rows), not by Spark jobs.
 
 CLI (spark-submit friendly):
     spark-submit --py-files filda_spark.zip -m filda_spark.runner \
@@ -106,18 +104,17 @@ def _lineage_path(out_dir: str) -> str:
 
 
 def _parquet_or_none(
-    spark: SparkSession, path: str, schema: T.StructType | str | None = None
+    spark: SparkSession, path: str, schema: T.StructType | str
 ) -> DataFrame | None:
     """First-run probe: a local path that does not exist yet is expected
     state, not an error — checking existence keeps the py4j
     AnalysisException stack trace out of bench/driver logs. Non-local URIs
     (s3a:// etc. on a real deployment) fall through to the read + except.
-    A known ``schema`` skips the schema-inference job."""
+    The known ``schema`` skips the schema-inference job."""
     if "://" not in path and not os.path.exists(path):
         return None
     try:
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except Exception:
         return None
 
@@ -209,12 +206,6 @@ def _overwrite_tiles(df: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
-def _tiles_rollup(det: DataFrame, state: DataFrame) -> DataFrame:
-    """Fire-density rollup of the store rows ``det`` under the dedup
-    verdicts of ``state``."""
-    return pipeline.tiles(det.join(state.select(*STATE_KEY, "is_dup"), STATE_KEY, "inner"))
-
-
 def _tile_bounds(det: DataFrame) -> pd.DataFrame:
     """Per-tile lat/lon bounds and row count (<=648 rows to the driver);
     ``_tile_bounds_np`` is the driver-side twin for a staged batch."""
@@ -242,10 +233,6 @@ def _tile_bounds_np(lat: np.ndarray, lon: np.ndarray) -> pd.DataFrame:
         lon_max=("lon", "max"),
         rows=("lat", "size"),
     )
-
-
-def _det_cell(lat_col: str = "FP_Latitude", lon_col: str = "FP_Longitude"):
-    return grids.cell_encode(F.col(lat_col), F.col(lon_col), pipeline.DEDUP_CELL_LEVEL)
 
 
 def _expand_cells(cells: np.ndarray, eps: float = spatial.DEDUP_EPS_DEG) -> np.ndarray:
@@ -283,7 +270,8 @@ def _read_tiles(
 ) -> DataFrame:
     """The existing ``tile_id`` partitions of ``root`` among ``tiles``,
     read with a known schema: no schema-inference job, and only those
-    partition directories are listed (static partition pruning)."""
+    partition directories are listed (static partition pruning); empty
+    when none exists."""
     paths = [f"{root}/tile_id={t}" for t in tiles if os.path.isdir(f"{root}/tile_id={t}")]
     if not paths:
         return spark.createDataFrame([], schema)
@@ -297,13 +285,15 @@ def _reconcile_tile(ring1: np.ndarray, eps: float):
     Verdicts of the tile's rows in ``ring1`` cells are recomputed against
     all of ``rows`` (which hold every within-eps partner of them); every
     other row of the tile carries its old verdict forward, and a row with
-    no old verdict raises. A tile without ring1 rows emits nothing."""
+    no old verdict raises; deleted rows' keys drop out. A tile without
+    ring1 rows emits nothing, unless its old state holds more keys than it
+    has rows (a delete shrank it)."""
     out_cols = _RECONCILE_SCHEMA.fieldNames()
 
     def reconcile(key, rows: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
         home = rows.tile_id.to_numpy() == key[0]
         redo = home & np.isin(rows._cell.to_numpy(), ring1)
-        if not redo.any():
+        if not redo.any() and home.sum() == len(old):
             return rows.iloc[:0].assign(is_dup=False, dup_of="")[out_cols]
         is_dup, dup_of = spatial.knn_dedup_cells_np(
             rows.doc_id.to_numpy(),
@@ -330,10 +320,6 @@ def _reconcile_tile(ring1: np.ndarray, eps: float):
     return reconcile
 
 
-def _read_state(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _parquet_or_none(spark, f"{out_dir}/dedup_state", STATE_SCHEMA)
-
-
 def _swap_tile_partitions(src: str, dst: str) -> list[str]:
     """Replace ``dst``'s ``tile_id=...`` partition directories with
     ``src``'s and return the swapped tile ids. Driver-side metadata commit
@@ -342,6 +328,7 @@ def _swap_tile_partitions(src: str, dst: str) -> list[str]:
     parquet-layout analogue of an Iceberg manifest swap (on an object
     store this is the manifest pointer update, not a data move)."""
     swapped: list[str] = []
+    os.makedirs(dst, exist_ok=True)
     for d in sorted(os.listdir(src)):
         if not d.startswith("tile_id="):
             continue
@@ -353,74 +340,48 @@ def _swap_tile_partitions(src: str, dst: str) -> list[str]:
     return swapped
 
 
-def update_dedup_incremental(
-    spark: SparkSession,
-    out_dir: str,
-    batch: DataFrame,
-    _maybe_empty: bool = False,
-    touched: np.ndarray | None = None,
-) -> None:
-    """Reconcile dedup_state + tiles after appending ``batch`` (enriched
-    detection rows) to the store. ``touched``, when the caller already has
-    the batch's level-14 cells (``process_docs`` reads them from the staged
-    batch), saves collecting them from ``batch``.
+def update_dedup_incremental(spark: SparkSession, out_dir: str, touched: np.ndarray) -> list[str]:
+    """Reconcile dedup_state + tiles after the store changed at the
+    level-14 cells ``touched``, and return the tiles swapped in. The one
+    writer of both views: a bulk load (no old state; every stored row sits
+    in a touched cell, so every verdict is computed), an append (the
+    batch's cells) and a delete (the deleted rows' cells).
 
-    A new detection can only change is_dup/dup_of verdicts for detections
-    within the dedup radius of itself, i.e. in the kRing (ring1) of the
-    batch's cells; recomputing those verdicts needs candidate dominators one
-    ring further out (ring2). So:
+    A changed detection can only change is_dup/dup_of verdicts for
+    detections within the dedup radius of itself, i.e. in the kRing
+    (ring1) of the touched cells; recomputing those verdicts needs
+    candidate dominators one ring further out (ring2). So:
 
-      1. on the driver: ring1 = expand(batch cells), ring2 = expand(ring1),
+      1. on the driver: ring1 = expand(touched), ring2 = expand(ring1),
          and the candidate 10-deg tiles of each (numpy, no Spark job)
       2. read the detections of the ring2 tiles (partition-pruned); each
          row goes to every ring1 tile its eps box reaches (``_partner_tiles``)
       3. ONE cogroup keyed by tile pairs those rows with the ring1 tiles'
-         old state: per tile, verdicts of its ring1 rows are recomputed
-         with ``spatial.knn_dedup_cells_np`` (the relation of
-         ``spatial.knn_dedup_np`` and ``pipeline.dedup``), every other row
-         of the tile keeps its old verdict
+         old state (none on a first load): per tile, verdicts of its ring1
+         rows are recomputed with ``spatial.knn_dedup_cells_np`` (the
+         relation of ``spatial.knn_dedup_np`` and ``pipeline.dedup``),
+         every other row of the tile keeps its old verdict, and deleted
+         rows' keys drop out (every tile that held a deleted row is a
+         ring1 tile)
       4. the output is staged once: its state columns are written
          partitioned and swapped into ONLY the reconciled tiles'
          dedup_state partitions, and ``pipeline.tiles`` of it
          dynamic-overwrites the same tiles' rollup
 
-    Cost is O(rows of the batch's tiles) regardless of store size — the
+    Cost is O(rows of the touched tiles) regardless of store size — the
     full rebuild the north rule's resume semantics would otherwise force
-    on every micro-batch. An append always reconciles at least its own
-    rows; only the delete path (``_maybe_empty``) may find nothing left to
-    reconcile, and then returns without a write."""
-    old = _read_state(spark, out_dir)
-    if old is None:
-        # bulk load (no prior state): every cell is "touched" — the ring
-        # machinery would select the whole store anyway, so dedup it
-        # directly and skip the expansion/pruning jobs (they only pay for
-        # themselves once the store outgrows the batch)
-        # no prior state on disk -> no self-read hazard: write the state
-        # partitions directly and reuse the materialized parquet for tiles
-        store = _read_detections(spark, out_dir).withColumn("_cell", _det_cell())
-        new_state = pipeline.dedup(store).select(*_STATE_COLS)
-        new_state.write.mode("overwrite").partitionBy("tile_id").parquet(f"{out_dir}/dedup_state")
-        state = _read_state(spark, out_dir)
-        _tiles_rollup(store, state).write.mode("overwrite").partitionBy("tile_id").parquet(
-            f"{out_dir}/tiles"
-        )
-        return
-
+    on every micro-batch. A tile a delete emptied emits nothing; its
+    partitions are the caller's to drop."""
     eps = spatial.DEDUP_EPS_DEG
-    if touched is None:
-        pos = batch.select("FP_Latitude", "FP_Longitude").toPandas()
-        touched = grids.cell_encode_np(pos.FP_Latitude, pos.FP_Longitude, pipeline.DEDUP_CELL_LEVEL)
-    touched = np.unique(touched)
-    if touched.size == 0:
-        return
-    ring1 = _expand_cells(touched, eps)
+    ring1 = _expand_cells(np.unique(touched), eps)
     ring2 = _expand_cells(ring1, eps)
     tiles1 = grids.cell_corner_tiles_np(ring1).tolist()
     tiles2 = grids.cell_corner_tiles_np(ring2).tolist()
 
+    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
     rows = (
         _read_tiles(spark, f"{out_dir}/detections", tiles2, _RECONCILE_DET_SCHEMA)
-        .withColumn("_cell", _det_cell())
+        .withColumn("_cell", grids.cell_encode(lat, lon, pipeline.DEDUP_CELL_LEVEL))
         .withColumn("_grp", F.explode(_partner_tiles(eps)))
         .filter(F.col("_grp").isin(tiles1))
     )
@@ -439,11 +400,9 @@ def update_dedup_incremental(
         stage = _stage_path(out_dir, "state")
         staged.select(*_STATE_COLS).write.mode("overwrite").partitionBy("tile_id").parquet(stage)
         swapped = _swap_tile_partitions(stage, f"{out_dir}/dedup_state")
-        if not swapped:
-            if not _maybe_empty:
-                raise RuntimeError("incremental dedup reconciled none of the appended rows")
-            return
-        _overwrite_tiles(pipeline.tiles(staged), f"{out_dir}/tiles")
+        if swapped:
+            _overwrite_tiles(pipeline.tiles(staged), f"{out_dir}/tiles")
+    return swapped
 
 
 def _mark(timings: dict | None, key: str, t0: float) -> float:
@@ -509,7 +468,8 @@ def process_docs(
         lon = pos.column("FP_Longitude").to_numpy()
         if lat.size:
             touched = grids.cell_encode_np(lat, lon, pipeline.DEDUP_CELL_LEVEL)
-            update_dedup_incremental(spark, out_dir, batch, touched=touched)
+            if not update_dedup_incremental(spark, out_dir, touched):
+                raise RuntimeError("incremental dedup reconciled none of the appended rows")
             t = _mark(timings, "dedup_tiles", t)
             _update_manifest(out_dir, _tile_bounds_np(lat, lon))
             t = _mark(timings, "manifest", t)
@@ -873,7 +833,7 @@ def compact_detections(
     if not todo:
         return result
     root = f"{out_dir}/detections"
-    det = spark.read.parquet(root).filter(F.col("tile_id").isin(todo))
+    det = _read_detections(spark, out_dir).filter(F.col("tile_id").isin(todo))
     # stage: the rewrite reads the same partitions it overwrites
     with _staged(spark, det, out_dir, "compact") as (staged, _):
         counts = {
@@ -926,7 +886,7 @@ def zorder_detections(
     if not todo:
         return result
     root = f"{out_dir}/detections"
-    det = spark.read.parquet(root).filter(F.col("tile_id").isin(todo))
+    det = _read_detections(spark, out_dir).filter(F.col("tile_id").isin(todo))
     with _staged(spark, det, out_dir, "zorder") as (staged, _):
         total = staged.count()
         n_parts = max(len(todo), -(-total // target_rows_per_file))
@@ -972,18 +932,17 @@ def delete_detections(
     Derived views stay exact: a deleted detection may have been the
     dominator of a surviving near-duplicate, so the dedup_state/tiles
     views are reconciled with the SAME neighborhood recompute an append
-    uses (``update_dedup_incremental`` with the deleted rows as the
-    touched set — ring1 verdicts recomputed from the post-delete store),
-    followed by a bounded scrub that removes deleted keys from any state
-    partition the recompute did not overwrite. Cost stays O(delete
-    neighborhood), and a full-rebuild-equality test pins the semantics.
+    uses (``update_dedup_incremental`` with the deleted rows' cells as the
+    touched set), which also rewrites every tile that held a deleted row
+    without its key. Cost stays O(delete neighborhood), and
+    full-rebuild-equality tests pin the semantics.
     """
     root = f"{out_dir}/detections"
     # SQL DELETE semantics under three-valued logic: a row is deleted iff
     # the predicate is TRUE; NULL-predicate rows must SURVIVE (a bare ~pred
     # filter would silently drop them without scrubbing their state keys)
     pred = F.coalesce(F.expr(predicate), F.lit(False))
-    det = spark.read.parquet(root)
+    det = _read_detections(spark, out_dir)
     affected = [
         r["tile_id"]
         for r in det.filter(pred).select("tile_id").distinct().collect()
@@ -1002,19 +961,18 @@ def delete_detections(
         if live:
             _overwrite_tiles(survivors.repartition("tile_id"), root)
         for t in emptied:
-            shutil.rmtree(f"{root}/tile_id={t}", ignore_errors=True)
-        store_emptied = not detection_file_stats(out_dir)
+            for table in ("detections", "dedup_state", "tiles"):
+                shutil.rmtree(f"{out_dir}/{table}/tile_id={t}", ignore_errors=True)
 
         # reconcile the derived views from the post-delete store: the
-        # deleted rows are the touched set (their neighbors' verdicts may
-        # change). If the delete emptied the ENTIRE store there is nothing
-        # to reconcile (and the detections root is no longer readable) —
-        # the views are simply dropped with their tiles by the scrub below.
-        if os.path.isdir(f"{out_dir}/dedup_state") and n_after < n_before:
-            deleted = staged.filter(pred)
-            if not store_emptied:
-                update_dedup_incremental(spark, out_dir, deleted, _maybe_empty=True)
-            _scrub_deleted_state(spark, out_dir, deleted, affected, emptied)
+        # deleted rows' cells are the touched set (their neighbors'
+        # verdicts may change, and their tiles must drop their keys)
+        if os.path.isdir(f"{out_dir}/dedup_state"):
+            pos = staged.filter(pred).select("FP_Latitude", "FP_Longitude").toPandas()
+            cells = grids.cell_encode_np(
+                pos.FP_Latitude, pos.FP_Longitude, pipeline.DEDUP_CELL_LEVEL
+            )
+            update_dedup_incremental(spark, out_dir, cells)
 
     # manifest repair for exactly the rewritten tiles
     mpath = _manifest_path(out_dir)
@@ -1022,7 +980,8 @@ def delete_detections(
         man = pd.read_parquet(mpath)
         man = man[~man.tile_id.isin(affected)]
         if live:
-            fresh = _tile_bounds(spark.read.parquet(root).filter(F.col("tile_id").isin(live)))
+            store = _read_detections(spark, out_dir)
+            fresh = _tile_bounds(store.filter(F.col("tile_id").isin(live)))
             man = pd.concat([man, fresh], ignore_index=True)
         _write_manifest(man, mpath)
 
@@ -1066,7 +1025,7 @@ def reprocess_granules(
     quoted = ", ".join("'" + i.replace("'", "''") + "'" for i in ids)
     delete_detections(spark, out_dir, f"doc_id IN ({quoted})")
     lin_path = _lineage_path(out_dir)
-    keep = spark.read.parquet(lin_path).filter(~F.col("partition_key").isin(ids))
+    keep = read_lineage(spark, out_dir).filter(~F.col("partition_key").isin(ids))
     tmp = _stage_path(out_dir, "lineage")
     keep.write.mode("overwrite").parquet(tmp)
     # rename-aside swap: the exposure window is two directory renames, not
@@ -1078,36 +1037,6 @@ def reprocess_granules(
     shutil.rmtree(old)
     res = run_incremental(spark, corpus_dir, out_dir, nl)
     return dict(reprocessed=len(ids), run=res)
-
-
-def _scrub_deleted_state(
-    spark: SparkSession,
-    out_dir: str,
-    deleted: DataFrame,
-    affected: list[str],
-    emptied: list[str],
-) -> None:
-    """Post-delete view hygiene: remove deleted keys from the state
-    partitions of every tile that held a deleted row (the neighborhood
-    recompute overwrites only tiles with surviving ring1 rows), recompute
-    the tiles rollup for those tiles, and drop partitions of emptied tiles.
-    Bounded by the delete's tile footprint (<=648), never by the store."""
-    state_root = f"{out_dir}/dedup_state"
-    tiles_root = f"{out_dir}/tiles"
-    live_tiles = sorted(set(affected) - set(emptied))
-    keys = deleted.select(*STATE_KEY).distinct()
-    if live_tiles:
-        st = _read_state(spark, out_dir).filter(F.col("tile_id").isin(live_tiles))
-        clean = st.join(F.broadcast(keys), STATE_KEY, "left_anti")
-        with _staged(spark, clean, out_dir, "scrub") as (clean, _):
-            _overwrite_tiles(clean, state_root)
-            det = spark.read.parquet(f"{out_dir}/detections").filter(
-                F.col("tile_id").isin(live_tiles)
-            )
-            _overwrite_tiles(_tiles_rollup(det, clean), tiles_root)
-    for t in emptied:
-        shutil.rmtree(f"{state_root}/tile_id={t}", ignore_errors=True)
-        shutil.rmtree(f"{tiles_root}/tile_id={t}", ignore_errors=True)
 
 
 _ORPHAN_GRACE_S = 3600.0
@@ -1189,7 +1118,7 @@ def remove_orphan_files(out_dir: str, grace_s: float = _ORPHAN_GRACE_S, dry_run:
 
 def read_results(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     det = _read_detections(spark, out_dir)
-    state = _read_state(spark, out_dir)
+    state = _parquet_or_none(spark, f"{out_dir}/dedup_state", STATE_SCHEMA)
     if state is not None:
         det = det.join(state.select(*STATE_KEY, "is_dup", "dup_of"), STATE_KEY, "left")
     return dict(detections=det, tiles=spark.read.parquet(f"{out_dir}/tiles"))

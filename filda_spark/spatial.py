@@ -273,10 +273,12 @@ def knn_dedup_np(doc_id, lat, lon, power, line, sample, eps: float = DEDUP_EPS_D
     strictly higher priority, where priority orders by (FP_Power desc — NaN
     lowest, doc_id, line, sample). Returns (is_dup bool[], dup_of str[]).
 
-    Single-node reference implementation (O(n^2), fine at fixture scale);
-    the engine computes the identical relation with a cell-neighborhood
-    shuffle join (kRing duplicate -> per-cell pairs) — see pipeline.dedup —
-    and, per tile of an incremental append, with ``knn_dedup_cells_np``.
+    Single-node reference implementation (O(n^2), fine at fixture scale).
+    The engine computes the identical relation twice: ``pipeline.dedup``
+    (the ``fire_detections`` query) with a cell-neighborhood shuffle join
+    (kRing duplicate -> per-cell pairs), and the fire store's one reconcile
+    (``runner.update_dedup_incremental``: bulk load, append and delete)
+    per tile with ``knn_dedup_cells_np``.
     """
     doc_id = np.asarray(doc_id)
     lat = np.asarray(lat, dtype=np.float64)

@@ -13,8 +13,9 @@ exactly-once granule processing across restarts.
 Late/duplicate granules need no watermark: the per-batch incremental dedup
 reconciliation is the event-time handling (a late granule can demote
 earlier detections to duplicates, which windowed streaming state could not
-express cheaply). runner.update_dedup_incremental derives the kRing
-neighborhood of the batch's cells on the driver and reconciles it in one
+express cheaply). runner.update_dedup_incremental (the store's one
+writer of dedup_state and tiles) derives the kRing neighborhood of the
+batch's cells on the driver and reconciles it in one
 cogroup keyed by tile, reading only the tiles that neighborhood touches,
 never the full store."""
 

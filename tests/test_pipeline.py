@@ -213,3 +213,15 @@ def test_enrich_keys_staged_pruned_scan(spark, corpus, nl, tmp_path):
                    ln.split("struct<", 1)[1].rstrip(">, .").split(","))
             for ln in m
         ), plan
+
+
+def test_static_tables_footer_schema_equals_inference(spark, corpus):
+    """enrich reads land_cover/peatland with the schema in their parquet
+    footer (no inference job per batch); it must be the schema Spark's
+    inference finds, or the joins would read different types."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    for name in ("land_cover", "peatland"):
+        path = f"{corpus['dir']}/{name}.parquet"
+        assert from_arrow_schema(pq.read_schema(path)) == spark.read.parquet(path).schema, name

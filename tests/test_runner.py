@@ -190,40 +190,60 @@ def _synthetic_detections(rng, doc: str, n: int, lat0: float, lon0: float, sprea
     )
 
 
-def test_incremental_append_across_tile_edge(spark, tmp_path):
-    """An append at the corner of four 10-deg tiles: its ring crosses both
-    tile edges, so verdicts flip in tiles the batch's own rows may not sit
-    in. dedup_state must equal a full pipeline.dedup rebuild exactly and the
-    tiles view's counts and maxima must match exactly; a tile outside the
-    ring keeps its rows."""
+def _land(spark, out: str, pdf: pd.DataFrame) -> np.ndarray:
+    """Append synthetic detection rows to the store at ``out``; returns
+    their level-14 cells (the reconcile's touched set)."""
     from pyspark.sql import functions as F
 
     from filda_spark import grids, pipeline
 
+    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
+    df = spark.createDataFrame(pdf).withColumns(
+        {
+            "cell_r7": grids.cell_encode(lat, lon, grids.LEVEL_R7),
+            "tile_id": grids.pc_tile_name(lat, lon),
+        }
+    )
+    df.write.mode("append").partitionBy("tile_id").parquet(f"{out}/detections")
+    return grids.cell_encode_np(pdf.FP_Latitude, pdf.FP_Longitude, pipeline.DEDUP_CELL_LEVEL)
+
+
+def _state_vs_rebuild(spark, out: str):
+    """(dedup_state, full pipeline.dedup rebuild of the store), both as
+    canonically ordered (tile_id, key, is_dup, dup_of) frames."""
+    from filda_spark import pipeline
+
+    cols = ["tile_id", *KEY, "is_dup", "dup_of"]
+    got = spark.read.parquet(f"{out}/dedup_state").select(cols).toPandas()
+    ref = pipeline.dedup(spark.read.parquet(f"{out}/detections")).select(cols).toPandas()
+    return _canon(got), _canon(ref)
+
+
+def test_incremental_append_across_tile_edge(spark, tmp_path):
+    """An append at the corner of four 10-deg tiles: its ring crosses both
+    tile edges, so verdicts flip in tiles the batch's own rows may not sit
+    in. dedup_state must equal a full pipeline.dedup rebuild exactly (after
+    the bulk load and after the append) and the tiles view's counts and
+    maxima must match exactly; a tile outside the ring keeps its rows."""
+    from filda_spark import pipeline
+
     rng = np.random.default_rng(11)
     out = str(tmp_path / "out_edge")
-    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
-
-    def land(pdf):
-        df = spark.createDataFrame(pdf).withColumns(
-            {
-                "cell_r7": grids.cell_encode(lat, lon, grids.LEVEL_R7),
-                "tile_id": grids.pc_tile_name(lat, lon),
-            }
-        )
-        df.write.mode("append").partitionBy("tile_id").parquet(f"{out}/detections")
-        return df
 
     base = pd.concat(
         [_synthetic_detections(rng, f"base{i}", 120, 10.0, 20.0, 0.03) for i in range(3)]
         + [_synthetic_detections(rng, "far", 40, 15.0, 35.0, 0.01)]
     )
-    runner.update_dedup_incremental(spark, out, land(base))  # bulk: no prior state
+    runner.update_dedup_incremental(spark, out, _land(spark, out, base))  # bulk: no prior state
+    got, ref = _state_vs_rebuild(spark, out)
+    assert len(got) == len(base) and ref.is_dup.sum() > 0
+    pd.testing.assert_frame_equal(got, ref)
+
     batch = pd.concat(
         [_synthetic_detections(rng, f"new{i}", 50, 10.0, 20.0, 0.012) for i in range(2)]
     )
     assert (batch.FP_Latitude < 10.0).any() and (batch.FP_Longitude < 20.0).any()
-    runner.update_dedup_incremental(spark, out, land(batch))
+    runner.update_dedup_incremental(spark, out, _land(spark, out, batch))
 
     got = (
         runner.read_results(spark, out)["detections"]
@@ -251,6 +271,37 @@ def test_incremental_append_across_tile_edge(spark, tmp_path):
     got_max, ref_max = tiles_got.max_frp.to_numpy(), tiles_ref.max_frp.to_numpy()
     assert np.array_equal(got_max, ref_max, equal_nan=True)
     assert np.allclose(tiles_got.total_frp, tiles_ref.total_frp, equal_nan=True)
+
+
+def test_delete_isolated_detection_drops_its_state(spark, tmp_path):
+    """Deleting a detection with no other detection within its ring in its
+    tile: no verdict in that tile is recomputed, yet the tile's state must
+    lose the deleted key (its old state holds more keys than the tile has
+    rows) and its tiles rollup must equal a rebuild of the post-delete
+    store."""
+    from filda_spark import pipeline
+
+    rng = np.random.default_rng(5)
+    out = str(tmp_path / "out_lone")
+    lone = _synthetic_detections(rng, "lone", 1, 15.0, 25.0, 0.0).assign(FP_Power=50.0)
+    base = pd.concat(
+        [_synthetic_detections(rng, f"base{i}", 60, 12.0, 22.0, 0.02) for i in range(2)] + [lone]
+    )
+    runner.update_dedup_incremental(spark, out, _land(spark, out, base))
+    assert runner.delete_detections(spark, out, "doc_id = 'lone'")["rows_deleted"] == 1
+
+    got, ref = _state_vs_rebuild(spark, out)
+    assert "lone" not in set(got.doc_id) and len(got) == len(base) - 1
+    pd.testing.assert_frame_equal(got, ref)
+
+    tkey = ["tile_id", "cell_r7"]
+    tiles_got = (
+        runner.read_results(spark, out)["tiles"].toPandas().sort_values(tkey).reset_index(drop=True)
+    )
+    full = pipeline.dedup(spark.read.parquet(f"{out}/detections"))
+    tiles_ref = pipeline.tiles(full).toPandas().sort_values(tkey).reset_index(drop=True)
+    assert tiles_got[tkey].astype(str).values.tolist() == tiles_ref[tkey].astype(str).values.tolist()
+    assert tiles_got.n_fires.tolist() == tiles_ref.n_fires.tolist()
 
 
 def test_lineage_wall_times_are_per_granule(spark, corpus, nl, tmp_path):
