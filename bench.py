@@ -489,8 +489,9 @@ def run_scaling() -> dict:
             # warm-up: spawn python workers + ship broadcasts once
             det_plan = pipeline.detect_detections(spark, corpus, nl)
             det_plan.write.mode("overwrite").format("noop").save()
-            # map-phase throughput: decode+detect+fit only (the per-granule
-            # compute that grows with corpus size; the batch tail is constant)
+            # map-phase throughput: the detect kernel only, fit included (the
+            # per-granule compute that grows with corpus size; the batch tail
+            # is constant)
             t0 = time.perf_counter()
             det_plan.write.mode("overwrite").format("noop").save()
             map_walls[n] = time.perf_counter() - t0
@@ -740,7 +741,7 @@ def _host_canary() -> dict:
 
 def run_phases() -> dict:
     """Phase split of one full fire-pipeline batch at the bench corpus:
-    where the wall goes (decode/fit/append/dedup+tiles/manifest/lineage).
+    where the wall goes (decode+detect/append/dedup+tiles/manifest/lineage).
     The non-map phases are the fixed per-batch driver tail that a 100x
     scale-up multiplies by batch count — the thing to keep <10% of wall."""
     import shutil
@@ -768,7 +769,7 @@ def run_phases() -> dict:
         runner.run_incremental(spark, corpus, out, nl, timings=timings)
         wall = round(time.perf_counter() - t0, 3)
         shutil.rmtree(out, ignore_errors=True)
-        tail = round(sum(v for k, v in timings.items() if k not in ("decode_detect", "fit")), 3)
+        tail = round(sum(v for k, v in timings.items() if k != "decode_detect"), 3)
         return {
             "metric": "fire pipeline phase split (one batch, bench corpus)",
             "value": wall,
@@ -777,7 +778,7 @@ def run_phases() -> dict:
             "sf": float(geom["n_docs"]),
             "phases": {
                 "wall": wall,
-                "map_phase": round(timings.get("decode_detect", 0.0) + timings.get("fit", 0.0), 3),
+                "map_phase": timings.get("decode_detect", 0.0),
                 "tail": tail,
                 "tail_frac": round(tail / wall, 3) if wall else None,
             },

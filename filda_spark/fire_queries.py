@@ -22,7 +22,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from filda_spark import pipeline, runner
+from filda_spark import pipeline
 from filda_spark.relational import _rfloor
 from filda_spark.namelist import make_namelist
 
@@ -107,12 +107,13 @@ def fire_detections(spark: SparkSession, sf_dir: str) -> DataFrame:
     if key in _DET_STAGE_CACHE:
         return spark.read.parquet(_DET_STAGE_CACHE[key])
     # enrich's semi-join reduction and dedup's self-join re-reference the
-    # detections several times — stage the fit output once, with the enrich
-    # keys, exactly as the production runner does. Per-session tempdir:
+    # detections several times — stage the detect output (fitted, with the
+    # enrich keys) once, as the production runner does. Per-session tempdir:
     # staging inside the shared corpus cache would race concurrent sessions.
     stage = os.path.join(_session_tmpdir("filda_stage_"), "detections")
-    fitted = runner.stage_fitted(spark, pipeline.detect_granules(spark, d, _nl(geom)), stage)
-    det = pipeline.enrich(spark, fitted, d)
+    det = pipeline.detect_detections(spark, d, _nl(geom))
+    det.write.mode("overwrite").parquet(stage)
+    det = pipeline.enrich(spark, spark.read.schema(det.schema).parquet(stage), d)
     final = os.path.join(_session_tmpdir("filda_stage_"), "deduped")
     pipeline.dedup(det).write.mode("overwrite").parquet(final)
     _DET_STAGE_CACHE[key] = final

@@ -212,20 +212,9 @@ def pc_tile_name_np(lat, lon) -> np.ndarray:
     return names[inv.ravel()]
 
 
-def pc_tile_yx(lat: Column, lon: Column, cells: int = PC_TILE_CELLS) -> tuple[Column, Column]:
-    """Within-tile (y, x): y from tile's north edge, x from west edge
-    (FILDA_CLT.py:62-70 gather semantics)."""
-    resol = 10.0 / cells
-    lat_max = (F.lit(9) - (F.lit(8) - F.floor(lat / F.lit(10.0)))) * F.lit(10.0)
-    lon_min = F.floor(lon / F.lit(10.0)) * F.lit(10.0)
-    y = F.floor((lat_max - lat) / F.lit(resol)).cast("int")
-    x = F.floor((lon - lon_min) / F.lit(resol)).cast("int")
-    y = F.least(F.greatest(y, F.lit(0)), F.lit(cells - 1))
-    x = F.least(F.greatest(x, F.lit(0)), F.lit(cells - 1))
-    return y, x
-
-
 def pc_tile_np(lat, lon, cells: int = PC_TILE_CELLS):
+    """Tile (h, v) and within-tile (y, x): y from the tile's north edge, x
+    from its west edge (FILDA_CLT.py:62-70 gather semantics)."""
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
     vid = (8 - np.floor(lat / 10.0)).astype(np.int64)

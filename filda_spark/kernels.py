@@ -678,10 +678,17 @@ def _frp_local(bg: dict, line: int, sample: int, win_size: int, data_type: str, 
     return out
 
 
+# the per-detection fields _frp_local returns
+_FRP_FIELDS = [
+    "FP_M13_Rad_Mean", "FP_M13_Rad_MAD", "FP_M13_Rad_Num", "FP_M13_WinSize", "FP_Power_QA"
+] + [f"FP_{ab}_Rad_{s}" for ab in ANCILLARY_BANDS for s in ("Mean", "Num", "STD")]
+
+
 def frp_background(det: dict, bg: dict, nl: dict) -> dict:
-    """Adaptive-window FRP background per detection (FILDA.py:1262-1457)."""
+    """Adaptive-window FRP background per detection (FILDA.py:1262-1457).
+    A granule without detections gets every field as an empty array."""
     n = det["FP_line_mod"].size
-    holder: dict[str, list] = {}
+    holder: dict[str, list] = {k: [] for k in _FRP_FIELDS}
     for i in range(n):
         data_type = "_OCEAN" if det["FP_land_water_mask"][i] == 0 else "_LAND"
         rec = _frp_local(

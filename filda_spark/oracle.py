@@ -122,11 +122,9 @@ def detect_granule(
     """Full per-granule detection: returns dict with detections (dict of 1-D
     arrays), candidate table, fire masks, and QA raster.
 
-    ``fit=False`` skips the per-detection Planck-mixture fit — the engine
-    runs it as a separate uniformly-partitioned stage (hot granules carry
-    10x the detections of cold ones, and the fit dominates per-fire CPU, so
-    keeping it inside the granule kernel would make granule skew the
-    scaling floor)."""
+    ``fit=False`` skips the per-detection Planck-mixture fit: the masks
+    path's shortcut, since masks and QA do not depend on it. The engine's
+    detect kernel fits inside the granule task, as here by default."""
     g = prepare_granule(media, anc, nl)
     ntl_mean, ntl_std = kernels.ntl_gather(
         np.nan_to_num(g["latitude"], nan=-90.0),

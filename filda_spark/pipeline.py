@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from filda_spark import grids, kernels, oracle, spatial
+from filda_spark import grids, oracle, spatial
 from filda_spark.functions import graph
 from filda_spark.fixtures import unpack_media
 from filda_spark.namelist import make_namelist
@@ -84,12 +84,14 @@ def _field(c: str) -> T.StructField:
 
 DET_SCHEMA = T.StructType([_field(c) for c in oracle.DET_COLUMNS])
 
-# the per-detection Planck fit runs as its own stage (see fit_detections)
-FIT_COLS = ["FP_Fire_Temp", "FP_BG_Temp", "FP_Fire_Frac", "FP_Opt_Status"]
-PRE_FIT_COLS = [c for c in oracle.DET_COLUMNS if c not in FIT_COLS]
-# detect output: pre-fit columns + the granule's measured kernel wall time
+# enrich's static-join keys: sinusoidal land-cover cell, Plate-Carree
+# peatland cell (the projections oracle.enrich_detections uses)
+ENRICH_KEYS = ["_h", "_v", "_row", "_col", "_ph", "_pv", "_py", "_px"]
+# detect output: detections + join keys + the granule's measured kernel wall
 DETECT_SCHEMA = T.StructType(
-    [_field(c) for c in PRE_FIT_COLS] + [T.StructField("_detect_wall_s", T.DoubleType())]
+    DET_SCHEMA.fields
+    + [T.StructField(k, T.LongType()) for k in ENRICH_KEYS]
+    + [T.StructField("_detect_wall_s", T.DoubleType())]
 )
 
 MASK_SCHEMA = T.StructType(
@@ -268,12 +270,14 @@ def make_detect_fn(anc_bc, nl: dict):
     """Kernel factory: ancillary broadcast + namelist closure; returns the
     cogrouped applyInPandas function (documents-group, media-group) -> rows.
 
-    Every row carries ``_detect_wall_s``, the granule's measured
-    decode+detect kernel wall time (north rule: per-partition lineage
-    rows/sec must be TRUE per-granule timings, not batch averages). A
-    granule with zero detections emits one sentinel row (FP_Line = -1,
-    dropped by fit_detections) so every granule still reports its timing."""
-    cols = PRE_FIT_COLS + ["_detect_wall_s"]
+    The one Python pass a detection makes before enrich: detect, Planck
+    fit and enrich's join keys (``ENRICH_KEYS``). Every row carries
+    ``_detect_wall_s``, the granule's measured kernel wall time (north
+    rule: per-partition lineage rows/sec must be TRUE per-granule timings,
+    not batch averages). A granule with zero detections emits one sentinel
+    row (FP_Line and keys -1; ``real_detections`` drops it) so every
+    granule still reports its timing."""
+    cols = DETECT_SCHEMA.fieldNames()
 
     def detect(doc_pdf: pd.DataFrame, media_pdf: pd.DataFrame) -> pd.DataFrame:
         if doc_pdf.empty or media_pdf.empty:
@@ -282,39 +286,19 @@ def make_detect_fn(anc_bc, nl: dict):
         _check_spans(doc_pdf, media_pdf)
         doc_id = doc_pdf.iloc[0]["doc_id"]
         media = unpack_media(media_pdf, kinds=DETECT_KINDS)
-        res = oracle.detect_granule(doc_id, media, anc_bc.value, nl, fit=False, masks=False)
-        out = oracle.detections_frame(doc_id, res["det"])[PRE_FIT_COLS]
+        res = oracle.detect_granule(doc_id, media, anc_bc.value, nl, masks=False)
+        out = oracle.detections_frame(doc_id, res["det"])
         if out.empty:
-            sentinel = {
-                c: [-1 if c in _INT_COLS else np.nan] for c in PRE_FIT_COLS if c != "doc_id"
-            }
-            sentinel["doc_id"] = [doc_id]
-            out = pd.DataFrame(sentinel)[PRE_FIT_COLS]
-        out = out.copy()
-        out["_detect_wall_s"] = time.perf_counter() - t0
-        return out
+            out = pd.DataFrame(
+                {c: [-1 if c in _INT_COLS or c in ENRICH_KEYS else np.nan] for c in cols}
+            ).assign(doc_id=doc_id)
+        else:
+            lat, lon = out["FP_Latitude"].to_numpy(), out["FP_Longitude"].to_numpy()
+            keys = grids.sinu_np(lat, lon) + grids.pc_tile_np(lat, lon, 240)
+            out = out.assign(**dict(zip(ENRICH_KEYS, keys)))
+        return out.assign(_detect_wall_s=time.perf_counter() - t0)
 
     return detect
-
-
-def _fit_stage(pdfs):
-    """mapInPandas kernel: per-detection Planck-mixture fit over a balanced
-    (round-robin) repartition of the detections — identical per-row math to
-    kernels.planck_fit, free of granule-level skew."""
-    for pdf in pdfs:
-        if pdf.empty:
-            yield pdf.reindex(columns=oracle.DET_COLUMNS)
-            continue
-        det = {"FP_line_img": pdf["FP_Line"].to_numpy()}
-        for b in kernels.FIT_BANDS:
-            det[f"FP_{b}_Rad"] = pdf[f"FP_{b}_Rad"].to_numpy()
-        det = kernels.planck_fit(det)
-        out = pdf.copy()
-        out["FP_Fire_Temp"] = det["FP_Fire_Temp"]
-        out["FP_BG_Temp"] = det["FP_BG_Temp"]
-        out["FP_Fire_Frac"] = det["FP_Fire_Frac"]
-        out["FP_Opt_Status"] = det["FP_Opt_Status"].astype(np.int32)
-        yield out[oracle.DET_COLUMNS]
 
 
 def make_masks_fn(anc_bc, nl: dict):
@@ -413,21 +397,18 @@ def detect_granules(
     doc_filter: DataFrame | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """Pre-fit detections of the night granules (pruned to ``doc_filter``
-    before decode) with per-granule ``_detect_wall_s`` and zero-detection
-    sentinel rows (see make_detect_fn). ``n_docs``, when the caller already
-    counted the frontier, sizes the decode stage without a count job."""
+    """Fitted, keyed detections of the night granules (pruned to
+    ``doc_filter`` before decode) with per-granule ``_detect_wall_s`` and
+    zero-detection sentinel rows (see make_detect_fn). ``n_docs``, when the
+    caller already counted the frontier, sizes the decode stage without a
+    count job."""
     return _cogroup(spark, corpus_dir, make_detect_fn, DETECT_SCHEMA, nl, doc_filter, n_docs)
 
 
-def fit_detections(spark: SparkSession, pre: DataFrame) -> DataFrame:
-    """Planck fit of the real detect rows (sentinels and timing dropped).
-    Hot granules carry ~10x the detections, so the fit is rebalanced
-    round-robin across tasks instead of inheriting the granule
-    partitioning (per-row independent => order-free)."""
-    pre = pre.filter(F.col("FP_Line") >= 0).drop("_detect_wall_s")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return pre.repartition(n_parts).mapInPandas(_fit_stage, schema=DET_SCHEMA)
+def real_detections(det: DataFrame) -> DataFrame:
+    """``detect_granules`` rows without the zero-detection sentinels and
+    the timing column: enrich's input."""
+    return det.filter(F.col("FP_Line") >= 0).drop("_detect_wall_s")
 
 
 def detect_detections(
@@ -436,7 +417,7 @@ def detect_detections(
     nl: dict | None = None,
     doc_filter: DataFrame | None = None,
 ) -> DataFrame:
-    return fit_detections(spark, detect_granules(spark, corpus_dir, nl, doc_filter))
+    return real_detections(detect_granules(spark, corpus_dir, nl, doc_filter))
 
 
 def detect_masks(spark: SparkSession, corpus_dir: str, nl: dict | None = None) -> DataFrame:
@@ -446,27 +427,6 @@ def detect_masks(spark: SparkSession, corpus_dir: str, nl: dict | None = None) -
 # ---------------------------------------------------------------------------
 # Detection-level enrichment (broadcast joins + polygon PIP)
 # ---------------------------------------------------------------------------
-
-
-def _sinu_keys_udf():
-    """Sinusoidal cell keys via the numpy projection (bit-parity with the
-    oracle; the trig keeps this in an Arrow UDF rather than JVM exprs)."""
-
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("h", T.LongType()),
-                T.StructField("v", T.LongType()),
-                T.StructField("row", T.LongType()),
-                T.StructField("col", T.LongType()),
-            ]
-        )
-    )
-    def sinu_keys(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        h, v, r, c = grids.sinu_np(lat.to_numpy(), lon.to_numpy())
-        return pd.DataFrame(dict(h=h, v=v, row=r, col=c))
-
-    return sinu_keys
 
 
 def make_pip_udf(polys_bc, id_key: str, flag: bool = True):
@@ -518,27 +478,6 @@ def _semi_reduced_left_join(
     return small.join(F.broadcast(reduced), keys, "left")
 
 
-def enrich_keys(det: DataFrame) -> DataFrame:
-    """Precompute the eight static-join key columns (sinusoidal land-cover
-    keys + Plate-Carree peatland keys) so a caller that stages ``det`` to
-    parquet before :func:`enrich` pays the sinusoidal pandas UDF exactly
-    once: every subsequent key-set job inside enrich becomes a
-    column-pruned parquet scan of 4 integer columns instead of a re-run of
-    decode/fit/UDF lineage. Idempotent no-op if the keys already exist."""
-    if "_h" in det.columns:
-        return det
-    sinu_keys = _sinu_keys_udf()
-    det = det.withColumn("_sk", sinu_keys("FP_Latitude", "FP_Longitude"))
-    det = det.withColumns(
-        {"_h": F.col("_sk.h"), "_v": F.col("_sk.v"), "_row": F.col("_sk.row"), "_col": F.col("_sk.col")}
-    ).drop("_sk")
-    py, px = grids.pc_tile_yx(F.col("FP_Latitude"), F.col("FP_Longitude"), cells=240)
-    ph, pv = grids.pc_tile_hv(F.col("FP_Latitude"), F.col("FP_Longitude"))
-    return det.withColumns(
-        {"_ph": ph.cast("long"), "_pv": pv.cast("long"), "_py": py.cast("long"), "_px": px.cast("long")}
-    )
-
-
 def _broadcast_polygons(spark: SparkSession, path: str, id_key: str):
     """The polygon table at ``path`` as a broadcast list of
     ``{id_key, lat, lon}`` dicts (the PIP UDFs' input)."""
@@ -564,11 +503,10 @@ def enrich(spark: SparkSession, det: DataFrame, corpus_dir: str) -> DataFrame:
     wp = f"{corpus_dir}/water_polygons.parquet"
     water_bc = _broadcast_polygons(spark, wp, "water_id") if os.path.exists(wp) else None
 
-    # both key sets are derived from det AS STAGED (pre-join): when the
-    # caller precomputed enrich_keys before staging, each key-set broadcast
+    # both key sets are derived from det AS STAGED (pre-join): the detect
+    # kernel wrote ENRICH_KEYS into the stage, so each key-set broadcast
     # job is a 4-int-column pruned parquet scan; chaining them off the
     # joined plan would re-evaluate the first broadcast join per key job
-    det = enrich_keys(det)
     det0 = det
     lc = lc.withColumnsRenamed({"h": "_h", "v": "_v", "row": "_row", "col": "_col"})
     det = _semi_reduced_left_join(det, lc, ["_h", "_v", "_row", "_col"], key_source=det0)

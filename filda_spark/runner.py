@@ -435,24 +435,22 @@ def process_docs(
 
     The batch's small metadata — row count, touched cells, manifest bounds,
     per-granule lineage metrics — comes from driver-side Arrow reads of the
-    two staged parquets (a few thousand rows), not from Spark jobs.
+    staged detect parquet (a few thousand rows), not from Spark jobs.
 
     Lineage wall_s/rows_per_sec are TRUE per-granule detect-kernel timings
     measured inside the cogroup task (_detect_wall_s), not batch averages
     (north rule: per-partition rows/sec metrics)."""
     t = time.perf_counter()
     doc_ids = [r.doc_id for r in todo.select("doc_id").collect()]
-    pre = pipeline.detect_granules(
+    det = pipeline.detect_granules(
         spark, corpus_dir, nl, doc_filter=doc_frame(spark, doc_ids), n_docs=len(doc_ids)
     )
-    # stage the detect output once: the fit and the lineage metrics both
-    # re-reference it and must not re-run the decode+detect kernel
-    with _staged(spark, pre, out_dir, f"{run_id}_pre") as (pre, pre_path):
+    # the one stage of the batch: enrich's key-set jobs and the driver-side
+    # reads below re-reference the detect output and must not re-run the
+    # decode+detect kernel
+    with _staged(spark, det, out_dir, f"{run_id}_det") as (det, det_path):
         t = _mark(timings, "decode_detect", t)
-        stage = _stage_path(out_dir, run_id)
-        batch = stage_fitted(spark, pre, stage)
-        t = _mark(timings, "fit", t)
-        enriched = pipeline.enrich(spark, batch, corpus_dir)
+        enriched = pipeline.enrich(spark, pipeline.real_detections(det), corpus_dir)
         # cluster by tile before the partitioned append: without this every
         # task writes a file into every tile directory it touches (tasks x
         # tiles small files per batch — the commit, not the data, becomes
@@ -463,7 +461,9 @@ def process_docs(
         )
         t = _mark(timings, "enrich_append", t)
 
-        pos = pq.read_table(stage, columns=["FP_Latitude", "FP_Longitude"])
+        pos = pq.read_table(
+            det_path, columns=["FP_Latitude", "FP_Longitude"], filters=[("FP_Line", ">=", 0)]
+        )
         lat = pos.column("FP_Latitude").to_numpy()
         lon = pos.column("FP_Longitude").to_numpy()
         if lat.size:
@@ -474,28 +474,27 @@ def process_docs(
             _update_manifest(out_dir, _tile_bounds_np(lat, lon))
             t = _mark(timings, "manifest", t)
 
-        metrics = pq.read_table(pre_path, columns=["doc_id", "FP_Line", "_detect_wall_s"])
+        metrics = pq.read_table(det_path, columns=["doc_id", "FP_Line", "_detect_wall_s"])
         lineage = _lineage_rows(run_id, doc_ids, metrics.to_pandas())
         spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
             _lineage_path(out_dir)
         )
         _commit_snapshot(out_dir, run_id, docs=len(doc_ids), rows=int(lat.size))
         t = _mark(timings, "lineage_snapshot", t)
-    shutil.rmtree(stage, ignore_errors=True)
     try:
         os.rmdir(f"{out_dir}/_stage")  # parent, if this was its last run
     except OSError:
         pass
 
 
-def _lineage_rows(run_id: str, doc_ids: list[str], pre: pd.DataFrame) -> pd.DataFrame:
+def _lineage_rows(run_id: str, doc_ids: list[str], det: pd.DataFrame) -> pd.DataFrame:
     """One lineage row per frontier granule from its staged detect rows
-    (``pre``: doc_id, FP_Line, _detect_wall_s). Sentinel rows (FP_Line < 0)
+    (``det``: doc_id, FP_Line, _detect_wall_s). Sentinel rows (FP_Line < 0)
     carry the timing of zero-detection granules and count 0 toward
     rows_out; Day-pruned granules in the frontier never decode -> wall_s
     0.0. wall_s is rounded to 4 decimals before rows_per_sec divides by it."""
     per_doc = (
-        pre.assign(_n=(pre.FP_Line >= 0).astype(np.int64))
+        det.assign(_n=(det.FP_Line >= 0).astype(np.int64))
         .groupby("doc_id")
         .agg(_wall=("_detect_wall_s", "max"), _n=("_n", "sum"))
         .reindex(doc_ids)
@@ -513,17 +512,6 @@ def _lineage_rows(run_id: str, doc_ids: list[str], pre: pd.DataFrame) -> pd.Data
             status="done",
         )
     )
-
-
-def stage_fitted(spark: SparkSession, pre: DataFrame, path: str) -> DataFrame:
-    """Fit the real rows of ``pipeline.detect_granules`` output and stage
-    them to parquet WITH the enrich join keys: enrich's two semi-join
-    key-set jobs then read 4 pruned int columns from this parquet instead
-    of re-running the sinusoidal pandas UDF per job. Returns the stage's
-    re-read with the writer's schema (no inference job)."""
-    det = pipeline.enrich_keys(pipeline.fit_detections(spark, pre))
-    det.write.mode("overwrite").parquet(path)
-    return spark.read.schema(det.schema).parquet(path)
 
 
 # ---------------------------------------------------------------------------

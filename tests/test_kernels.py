@@ -142,6 +142,24 @@ def test_saa_flag_rect():
     assert kernels.saa_flag(np.array([10.0]), np.array([-60.0]), nl)[0] == 0
 
 
+def test_frp_background_without_detections():
+    """A granule whose candidates all fail the contextual test reaches the
+    FRP background with no detections; it must still get every field
+    _frp_local returns (as empty arrays), or fire_params raises KeyError
+    and the granule's failure takes its whole batch down."""
+    from filda_spark.namelist import ANCILLARY_BANDS
+
+    nl = make_namelist()
+    bg = {
+        f"rad{b}_LAND": np.ones((40, 40) if b in ("I04", "I05") else (20, 20))
+        for b in ("M13", *ANCILLARY_BANDS)
+    }
+    one = kernels._frp_local(bg, 10, 10, 3, "_LAND", nl)
+    none = kernels.frp_background({"FP_line_mod": np.empty(0, np.int64)}, bg, nl)
+    assert set(one) <= set(none)
+    assert all(none[k].size == 0 for k in one)
+
+
 def test_mask_paint_priority():
     # bowtie (painted last) must win over a fire pixel
     g = dict(

@@ -183,18 +183,15 @@ def test_bucketed_media_no_shuffle(spark, corpus, nl, tmp_path):
 
 
 def test_enrich_keys_staged_pruned_scan(spark, corpus, nl, tmp_path):
-    """enrich over a staged-with-keys parquet must (a) produce the same
-    rows as enrich over the raw detect output, and (b) plan each semi-join
-    key-set job as a pruned scan of ONLY the 4 key columns — never a
-    re-run of the decode/fit UDF lineage (commit 6995c64)."""
+    """enrich over the staged detect output (which carries the join keys)
+    must (a) produce the same rows as enrich over the unstaged plan, and
+    (b) plan each semi-join key-set job as a pruned scan of ONLY the 4 key
+    columns — never a re-run of the decode/fit UDF lineage (commit 6995c64)."""
     det = pipeline.detect_detections(spark, corpus["dir"], nl)
     base = pipeline.enrich(spark, det, corpus["dir"]).toPandas()
 
     stage = str(tmp_path / "staged_det")
-    keyed = pipeline.enrich_keys(det)
-    # idempotent: a second application is a no-op (same plan object)
-    assert pipeline.enrich_keys(keyed) is keyed
-    keyed.write.mode("overwrite").parquet(stage)
+    det.write.mode("overwrite").parquet(stage)
     staged = spark.read.parquet(stage)
     got = pipeline.enrich(spark, staged, corpus["dir"]).toPandas()
     _assert_frames_equal(

@@ -319,6 +319,50 @@ def test_lineage_wall_times_are_per_granule(spark, corpus, nl, tmp_path):
     assert ((lin.rows_out / lin.wall_s - lin.rows_per_sec).abs() < 1e-6).all()
 
 
+def test_zero_detection_granule(spark, nl, tmp_path, monkeypatch):
+    """A night granule without detections reports its kernel wall through
+    the detect kernel's sentinel row (rows_out 0) and lands nowhere else:
+    not in detections, dedup_state, the manifest or the snapshot's rows."""
+    from filda_spark import fixtures
+
+    planted = fixtures._features
+
+    def features(pair: int) -> dict:
+        # pair 3 plants its fires under its cloud deck (no FRP background,
+        # so fire_params drops them); its first overpass is the corpus' Day
+        # granule, so exactly one night granule detects nothing
+        f = planted(pair)
+        if pair != 3:
+            return f
+        r0, r1, c0, c1 = f["cloud_rect"]
+        cloud = ((r0 + r1) // 2, (c0 + c1) // 2)
+        singles = ("fire_sat", "fire_water", "flare", "fire_artifact")
+        return {**f, "fires_abs": [], "fires_ctx": [], **dict.fromkeys(singles, cloud)}
+
+    monkeypatch.setattr(fixtures, "_features", features)
+    d = str(tmp_path / "corpus")
+    fixtures.build_corpus(d, n_docs=8)
+    out = str(tmp_path / "out")
+    runner.run_incremental(spark, d, out, nl)
+
+    empty = "VNP.A2019213.0330"
+    lin = runner.read_lineage(spark, out).toPandas().set_index("partition_key")
+    assert len(lin) == 7  # 8 docs - 1 Day granule
+    assert lin.at[empty, "rows_out"] == 0 and lin.at[empty, "wall_s"] > 0
+    assert (lin.drop(index=empty).rows_out > 0).all()
+    n_real = int(lin.rows_out.sum())
+
+    det = spark.read.parquet(f"{out}/detections").toPandas()
+    assert len(det) == n_real and (det.FP_Line >= 0).all()
+    assert empty not in set(det.doc_id)
+    state = spark.read.parquet(f"{out}/dedup_state").toPandas()
+    assert len(state) == n_real and (state.FP_Line >= 0).all()
+    man = pd.read_parquet(runner._manifest_path(out))
+    assert man.rows.sum() == n_real
+    assert np.isfinite(man[["lat_min", "lat_max", "lon_min", "lon_max"]].to_numpy()).all()
+    assert runner.snapshots(out)[-1]["rows"] == n_real
+
+
 def test_compact_detections(spark, corpus, nl, tmp_path):
     """Small-file maintenance: growing batches leave one file per batch per
     touched tile; compaction rewrites only the over-threshold tiles down to
