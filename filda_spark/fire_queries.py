@@ -108,7 +108,7 @@ def fire_detections(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.read.parquet(_DET_STAGE_CACHE[key])
     # enrich's semi-join reduction and dedup's self-join re-reference the
     # detections several times — stage the detect output (fitted, with the
-    # enrich keys) once, as the production runner does. Per-session tempdir:
+    # per-row enrich columns and join keys) once, as the production runner does. Per-session tempdir:
     # staging inside the shared corpus cache would race concurrent sessions.
     stage = os.path.join(_session_tmpdir("filda_stage_"), "detections")
     det = pipeline.detect_detections(spark, d, _nl(geom))

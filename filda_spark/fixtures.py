@@ -830,7 +830,18 @@ def build_corpus(
     )
 
 
+def load_polygons(path: str, id_key: str) -> list[dict]:
+    """A polygon table written by ``build_corpus`` as the
+    ``{id_key, lat, lon}`` dicts the PIP kernels take."""
+    return [
+        {id_key: int(getattr(r, id_key)), "lat": list(r.lat), "lon": list(r.lon)}
+        for r in pd.read_parquet(path).itertuples()
+    ]
+
+
 def load_ancillary(out_dir: str) -> dict:
+    """The granule kernels' broadcast: rasters, LUTs and the flare and
+    water polygon sets."""
     ntl_npz = np.load(f"{out_dir}/ntl_tiles.npz")
     ntl: dict = {}
     for key in ntl_npz.files:
@@ -845,4 +856,6 @@ def load_ancillary(out_dir: str) -> dict:
         area_lut=np.load(f"{out_dir}/area_lut.npy"),
         overlap_lut=np.load(f"{out_dir}/overlap_lut.npy"),
         ntl=ntl,
+        flares=load_polygons(f"{out_dir}/gas_flare_polygons.parquet", "flare_id"),
+        water_polygons=load_polygons(f"{out_dir}/water_polygons.parquet", "water_id"),
     )

@@ -3,11 +3,11 @@ kernels (SURVEY.md §3.1 engine lifecycle):
 
   documents ⋈cogroup media  ──applyInPandas──►  detections
       │   (Day-granule pruning BEFORE decode; span-sequence invariant
-      │    asserted inside the kernel; ancillary rasters broadcast)
+      │    asserted inside the kernel; ancillary rasters and polygon sets
+      │    broadcast; flare/water PIP and cell ids computed per granule)
       ▼
-  detections ──broadcast joins──► land cover / peatland / flare PIP
-      │          (sinusoidal + Plate-Carree cell equi-joins; polygon set
-      │           broadcast, bbox-prefilter + ray-cast in an Arrow UDF)
+  detections ──broadcast joins──► land cover / peatland
+      │          (sinusoidal + Plate-Carree cell equi-joins)
       ▼
   kRing cell-neighborhood shuffle ──► kNN dominance dedup   (the ONE shuffle)
       ▼
@@ -84,12 +84,23 @@ def _field(c: str) -> T.StructField:
 
 DET_SCHEMA = T.StructType([_field(c) for c in oracle.DET_COLUMNS])
 
+# the per-row enrich columns, pure functions of a row's lat/lon: flare and
+# water polygon membership, spatial.encode_cells_np's ids
+ROW_ENRICH_FIELDS = [
+    T.StructField("FP_Gas_Flaring", T.IntegerType()),
+    T.StructField("FP_Water_PIP", T.IntegerType()),
+    *(T.StructField(f"{g}_r{r}", T.LongType()) for g in ("cell", "hex") for r in (7, 8, 9)),
+    T.StructField("s2_token", T.StringType()),
+    T.StructField("tile_id", T.StringType()),
+]
 # enrich's static-join keys: sinusoidal land-cover cell, Plate-Carree
 # peatland cell (the projections oracle.enrich_detections uses)
 ENRICH_KEYS = ["_h", "_v", "_row", "_col", "_ph", "_pv", "_py", "_px"]
-# detect output: detections + join keys + the granule's measured kernel wall
+# detect output: detections + per-row enrich columns + join keys + the
+# granule's measured kernel wall
 DETECT_SCHEMA = T.StructType(
     DET_SCHEMA.fields
+    + ROW_ENRICH_FIELDS
     + [T.StructField(k, T.LongType()) for k in ENRICH_KEYS]
     + [T.StructField("_detect_wall_s", T.DoubleType())]
 )
@@ -270,14 +281,19 @@ def make_detect_fn(anc_bc, nl: dict):
     """Kernel factory: ancillary broadcast + namelist closure; returns the
     cogrouped applyInPandas function (documents-group, media-group) -> rows.
 
-    The one Python pass a detection makes before enrich: detect, Planck
-    fit and enrich's join keys (``ENRICH_KEYS``). Every row carries
+    The one Python pass a detection makes: detect, Planck fit, the per-row
+    enrich columns (``ROW_ENRICH_FIELDS``: flare and water PIP against STR
+    trees built per granule from the broadcast polygon sets, and
+    ``spatial.encode_cells_np``'s ids — the code oracle.enrich_detections
+    runs) and enrich's join keys (``ENRICH_KEYS``). Every row carries
     ``_detect_wall_s``, the granule's measured kernel wall time (north
     rule: per-partition lineage rows/sec must be TRUE per-granule timings,
     not batch averages). A granule with zero detections emits one sentinel
-    row (FP_Line and keys -1; ``real_detections`` drops it) so every
-    granule still reports its timing."""
+    row (FP_Line and the other integer columns -1; ``real_detections``
+    drops it) so every granule still reports its timing."""
     cols = DETECT_SCHEMA.fieldNames()
+    sentinel = {f.name: [-1 if isinstance(f.dataType, T.IntegralType) else np.nan]
+                for f in DETECT_SCHEMA.fields}
 
     def detect(doc_pdf: pd.DataFrame, media_pdf: pd.DataFrame) -> pd.DataFrame:
         if doc_pdf.empty or media_pdf.empty:
@@ -286,16 +302,26 @@ def make_detect_fn(anc_bc, nl: dict):
         _check_spans(doc_pdf, media_pdf)
         doc_id = doc_pdf.iloc[0]["doc_id"]
         media = unpack_media(media_pdf, kinds=DETECT_KINDS)
-        res = oracle.detect_granule(doc_id, media, anc_bc.value, nl, masks=False)
+        anc = anc_bc.value
+        res = oracle.detect_granule(doc_id, media, anc, nl, masks=False)
         out = oracle.detections_frame(doc_id, res["det"])
         if out.empty:
-            out = pd.DataFrame(
-                {c: [-1 if c in _INT_COLS or c in ENRICH_KEYS else np.nan] for c in cols}
-            ).assign(doc_id=doc_id)
+            out = pd.DataFrame(sentinel).assign(doc_id=doc_id)
         else:
             lat, lon = out["FP_Latitude"].to_numpy(), out["FP_Longitude"].to_numpy()
+            for flag, polys, id_key in (
+                ("FP_Gas_Flaring", anc["flares"], "flare_id"),
+                ("FP_Water_PIP", anc["water_polygons"], "water_id"),
+            ):
+                fid = spatial.assign_polygons_strtree(
+                    lat, lon, spatial.build_strtree(polys), polys, id_key
+                )
+                out[flag] = (fid >= 0).astype(np.int32)
             keys = grids.sinu_np(lat, lon) + grids.pc_tile_np(lat, lon, 240)
-            out = out.assign(**dict(zip(ENRICH_KEYS, keys)))
+            out = out.assign(
+                **spatial.encode_cells_np({"FP_Latitude": lat, "FP_Longitude": lon}),
+                **dict(zip(ENRICH_KEYS, keys)),
+            )
         return out.assign(_detect_wall_s=time.perf_counter() - t0)
 
     return detect
@@ -431,12 +457,13 @@ def detect_masks(spark: SparkSession, corpus_dir: str, nl: dict | None = None) -
 
 def make_pip_udf(polys_bc, id_key: str, flag: bool = True):
     """Point-in-polygon against a broadcast polygon set: STR R-tree built
-    lazily ONCE per executor python worker from the broadcast (the north
-    rule's broadcast polygon R-tree), then every Arrow batch descends the
-    tree together — a granule-local batch prunes to its own subtrees
-    (measured 39x over the linear polygon scan at 2e4 polygons). Flares
-    and water bodies share it. ``flag=True`` returns 0/1 membership;
-    ``flag=False`` returns the matched polygon's ``id_key`` (-1 outside)."""
+    lazily from the broadcast (the north rule's broadcast polygon R-tree),
+    then every Arrow batch descends the tree together — a granule-local
+    batch prunes to its own subtrees (measured 39x over the linear polygon
+    scan at 2e4 polygons). The closure cache is cold in every task, even
+    when Spark reuses the Python worker, so the tree is built once per
+    task. ``flag=True`` returns 0/1 membership; ``flag=False`` returns the
+    matched polygon's ``id_key`` (-1 outside)."""
     cache: dict = {}
 
     @F.pandas_udf(T.IntegerType())
@@ -478,30 +505,19 @@ def _semi_reduced_left_join(
     return small.join(F.broadcast(reduced), keys, "left")
 
 
-def _broadcast_polygons(spark: SparkSession, path: str, id_key: str):
-    """The polygon table at ``path`` as a broadcast list of
-    ``{id_key, lat, lon}`` dicts (the PIP UDFs' input)."""
-    pdf = pd.read_parquet(path)
-    return spark.sparkContext.broadcast(
-        [
-            {id_key: int(getattr(r, id_key)), "lat": list(r.lat), "lon": list(r.lon)}
-            for r in pdf.itertuples()
-        ]
-    )
-
-
 def enrich(spark: SparkSession, det: DataFrame, corpus_dir: str) -> DataFrame:
-    """Land cover (sinusoidal equi-join, water override 17), peatland
-    (Plate-Carree equi-join), gas-flare PIP, qcell/tile encodes."""
+    """The two static joins over detect output: land cover (sinusoidal
+    equi-join, water override 17) and peatland (Plate-Carree equi-join),
+    keyed by the ``ENRICH_KEYS`` the detect kernel wrote. Every other enrich
+    column arrives from the kernel (``ROW_ENRICH_FIELDS``), so this plan
+    runs no Python. Output columns: ``det``'s without the keys, then
+    FP_Land_Type, FP_Peatland, FP_Peatfrac."""
     # read with the schema in each file's footer: what inference finds
     # (pinned by test), without its Spark job per batch
     lc, peat = (
         spark.read.schema(from_arrow_schema(pq.read_schema(p))).parquet(p)
         for p in (f"{corpus_dir}/land_cover.parquet", f"{corpus_dir}/peatland.parquet")
     )
-    polys_bc = _broadcast_polygons(spark, f"{corpus_dir}/gas_flare_polygons.parquet", "flare_id")
-    wp = f"{corpus_dir}/water_polygons.parquet"
-    water_bc = _broadcast_polygons(spark, wp, "water_id") if os.path.exists(wp) else None
 
     # both key sets are derived from det AS STAGED (pre-join): the detect
     # kernel wrote ENRICH_KEYS into the stage, so each key-set broadcast
@@ -518,53 +534,11 @@ def enrich(spark: SparkSession, det: DataFrame, corpus_dir: str) -> DataFrame:
 
     peat = peat.withColumnsRenamed({"h": "_ph", "v": "_pv", "y": "_py", "x": "_px"})
     det = _semi_reduced_left_join(det, peat, ["_ph", "_pv", "_py", "_px"], key_source=det0)
-    det = (
+    return (
         det.withColumn("FP_Peatland", F.coalesce(F.col("peat").cast("int"), F.lit(0)))
         .withColumn("FP_Peatfrac", F.coalesce(F.col("peat_frac"), F.lit(0.0)))
         .drop("peat", "peat_frac", "_ph", "_pv", "_py", "_px")
     )
-
-    flare_flag = make_pip_udf(polys_bc, "flare_id")
-    det = det.withColumn("FP_Gas_Flaring", flare_flag("FP_Latitude", "FP_Longitude"))
-    if water_bc is not None:
-        # vector land/water membership (north rule): must equal the raster
-        # land_water_mask==0 semantics on fixtures (asserted in tests)
-        water_flag = make_pip_udf(water_bc, "water_id")
-        det = det.withColumn("FP_Water_PIP", water_flag("FP_Latitude", "FP_Longitude"))
-
-    lat, lon = F.col("FP_Latitude"), F.col("FP_Longitude")
-    from filda_spark import hex as hx
-
-    det = det.withColumns(
-        {
-            "cell_r7": grids.cell_encode(lat, lon, grids.LEVEL_R7),
-            "cell_r8": grids.cell_encode(lat, lon, grids.LEVEL_R8),
-            "cell_r9": grids.cell_encode(lat, lon, grids.LEVEL_R9),
-            # true-hex ids (aperture-7, filda_spark.hex): the north star's
-            # "H3 cells (res 7-9)" alongside the qcell/S2 pair
-            "hex_r7": hx.encode(lat, lon, hx.HEX_R7),
-            "hex_r8": hx.encode(lat, lon, hx.HEX_R8),
-            "hex_r9": hx.encode(lat, lon, hx.HEX_R9),
-        }
-    )
-    det = det.withColumn("s2_token", _s2_token_udf()("FP_Latitude", "FP_Longitude"))
-    det = det.withColumn("tile_id", grids.pc_tile_name(lat, lon))
-    return det
-
-
-def _s2_token_udf():
-    """S2 level-14 token via the shared numpy implementation (Arrow UDF:
-    the face/Hilbert bit walk has no JVM expression form)."""
-
-    @F.pandas_udf(T.StringType())
-    def s2_token(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        from filda_spark import s2, spatial
-
-        return pd.Series(
-            s2.token(s2.cell_id(lat.to_numpy(), lon.to_numpy(), spatial.S2_TOKEN_LEVEL))
-        )
-
-    return s2_token
 
 
 # ---------------------------------------------------------------------------

@@ -223,15 +223,15 @@ def _tile_bounds(det: DataFrame) -> pd.DataFrame:
     )
 
 
-def _tile_bounds_np(lat: np.ndarray, lon: np.ndarray) -> pd.DataFrame:
-    """``_tile_bounds`` of a batch's coordinates, on the driver."""
-    pos = pd.DataFrame(dict(tile_id=grids.pc_tile_name_np(lat, lon), lat=lat, lon=lon))
-    return pos.groupby("tile_id", as_index=False).agg(
-        lat_min=("lat", "min"),
-        lat_max=("lat", "max"),
-        lon_min=("lon", "min"),
-        lon_max=("lon", "max"),
-        rows=("lat", "size"),
+def _tile_bounds_np(det: pd.DataFrame) -> pd.DataFrame:
+    """``_tile_bounds`` of a batch's staged rows (``tile_id`` and
+    coordinates as the detect kernel wrote them), on the driver."""
+    return det.groupby("tile_id", as_index=False).agg(
+        lat_min=("FP_Latitude", "min"),
+        lat_max=("FP_Latitude", "max"),
+        lon_min=("FP_Longitude", "min"),
+        lon_max=("FP_Longitude", "max"),
+        rows=("FP_Latitude", "size"),
     )
 
 
@@ -433,9 +433,11 @@ def process_docs(
     rows and the snapshot's doc count; ``n_docs``, the count some callers
     already have, is therefore not needed.
 
-    The batch's small metadata — row count, touched cells, manifest bounds,
-    per-granule lineage metrics — comes from driver-side Arrow reads of the
-    staged detect parquet (a few thousand rows), not from Spark jobs.
+    The batch's small metadata — row count, touched cells, manifest bounds
+    (from the kernel's ``tile_id``), per-granule lineage metrics — comes
+    from one driver-side Arrow read of the staged detect parquet (a few
+    thousand rows), not from Spark jobs. The stage already holds every
+    per-row enrich column, so enrich adds only its two static joins.
 
     Lineage wall_s/rows_per_sec are TRUE per-granule detect-kernel timings
     measured inside the cogroup task (_detect_wall_s), not batch averages
@@ -461,21 +463,22 @@ def process_docs(
         )
         t = _mark(timings, "enrich_append", t)
 
-        pos = pq.read_table(
-            det_path, columns=["FP_Latitude", "FP_Longitude"], filters=[("FP_Line", ">=", 0)]
-        )
-        lat = pos.column("FP_Latitude").to_numpy()
-        lon = pos.column("FP_Longitude").to_numpy()
+        staged = pq.read_table(
+            det_path,
+            columns=["doc_id", "FP_Line", "_detect_wall_s", "FP_Latitude", "FP_Longitude", "tile_id"],
+        ).to_pandas()
+        pos = staged[staged.FP_Line >= 0]
+        lat = pos.FP_Latitude.to_numpy()
+        lon = pos.FP_Longitude.to_numpy()
         if lat.size:
             touched = grids.cell_encode_np(lat, lon, pipeline.DEDUP_CELL_LEVEL)
             if not update_dedup_incremental(spark, out_dir, touched):
                 raise RuntimeError("incremental dedup reconciled none of the appended rows")
             t = _mark(timings, "dedup_tiles", t)
-            _update_manifest(out_dir, _tile_bounds_np(lat, lon))
+            _update_manifest(out_dir, _tile_bounds_np(pos))
             t = _mark(timings, "manifest", t)
 
-        metrics = pq.read_table(det_path, columns=["doc_id", "FP_Line", "_detect_wall_s"])
-        lineage = _lineage_rows(run_id, doc_ids, metrics.to_pandas())
+        lineage = _lineage_rows(run_id, doc_ids, staged)
         spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
             _lineage_path(out_dir)
         )

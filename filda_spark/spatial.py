@@ -27,7 +27,7 @@ from filda_spark.grids import (
     LEVEL_R9,
     cell_encode_np,
     cell_xy_np,
-    pc_tile_np,
+    pc_tile_name_np,
 )
 
 
@@ -254,8 +254,7 @@ def encode_cells_np(det: dict) -> dict:
     det["hex_r8"] = hx.encode_np(lat, lon, hx.HEX_R8)
     det["hex_r9"] = hx.encode_np(lat, lon, hx.HEX_R9)
     det["s2_token"] = s2.token(s2.cell_id(lat, lon, S2_TOKEN_LEVEL))
-    hid, vid, _, _ = pc_tile_np(lat, lon)
-    det["tile_id"] = np.array([f"h{h:02d}v{v:02d}" for h, v in zip(hid, vid)])
+    det["tile_id"] = pc_tile_name_np(lat, lon)
     return det
 
 

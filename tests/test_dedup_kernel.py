@@ -93,7 +93,10 @@ def test_numpy_rings_equal_spark_rings(spark):
     """Ring and tile helpers on random cells (polar rows and the
     antimeridian included) equal the Spark expressions: cell_encode,
     lon_ring_halfwidth, cell_kring_dyn, pc_tile_name, and runner's
-    _expand_cells against the kRing of the cell-centre latitude."""
+    _expand_cells against the kRing of the cell-centre latitude. The ids
+    the detect kernel stores (spatial.encode_cells_np: cell_r7..r9,
+    tile_id) equal cell_encode/pc_tile_name too, as the reconcile still
+    derives its cells and partner tiles in Spark."""
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(5)
@@ -118,12 +121,18 @@ def test_numpy_rings_equal_spark_rings(spark):
         F.array_sort(grids.cell_kring_dyn(cell, kx_row)).alias("ring_row"),
         F.array_sort(grids.cell_kring_dyn(cell, kx_cell)).alias("ring_cell"),
         grids.pc_tile_name(F.col("lat"), F.col("lon")).alias("tile"),
+        *(grids.cell_encode(F.col("lat"), F.col("lon"), r).alias(f"cell_r{i}")
+          for i, r in ((7, grids.LEVEL_R7), (8, grids.LEVEL_R8), (9, grids.LEVEL_R9))),
     ).toPandas()
 
     assert got.cell_s.tolist() == cells.tolist()
     kx_np = grids.lon_ring_halfwidth_np(lat, EPS, lvl)
     assert got.kx_row.tolist() == kx_np.tolist()
     assert got.tile.tolist() == grids.pc_tile_name_np(lat, lon).tolist()
+    enc = spatial.encode_cells_np({"FP_Latitude": lat, "FP_Longitude": lon})
+    for c in ("cell_r7", "cell_r8", "cell_r9"):
+        assert enc[c].tolist() == got[c].tolist(), c
+    assert enc["tile_id"].tolist() == got.tile.tolist()
     for i, c in enumerate(cells):
         ring = grids.cell_kring_dyn_np([c], [kx_np[i]])
         assert sorted(ring.tolist()) == list(got.ring_row[i]), (lat[i], lon[i])

@@ -212,6 +212,18 @@ def test_enrich_keys_staged_pruned_scan(spark, corpus, nl, tmp_path):
         ), plan
 
 
+def test_enrich_runs_no_python_stage(spark, corpus, nl, tmp_path):
+    """Every per-row enrich column comes from the detect kernel, so enrich
+    over a staged detect scan is two static joins: its executed plan holds
+    no Python UDF node."""
+    stage = str(tmp_path / "staged_det")
+    pipeline.detect_detections(spark, corpus["dir"], nl).write.mode("overwrite").parquet(stage)
+    enr = pipeline.enrich(spark, spark.read.parquet(stage), corpus["dir"])
+    plan = enr._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+
+
 def test_static_tables_footer_schema_equals_inference(spark, corpus):
     """enrich reads land_cover/peatland with the schema in their parquet
     footer (no inference job per batch); it must be the schema Spark's

@@ -3,6 +3,7 @@ foreachBatch must produce the same store as a single batch run, process each
 granule exactly once across restarts, and pick up late-arriving files."""
 
 import os
+import time
 
 import pandas as pd
 import pytest
@@ -57,13 +58,18 @@ def test_hotspot_tracker_stateful(spark, tmp_path):
     os.makedirs(src)
     # cell A appears in all 4 batches, cell B only in batch 0
     batches = []
+    t0 = time.time() - 60
     for b in range(4):
         rows = [dict(cell_r7=100, FP_Power=float(10 + b))]
         if b == 0:
             rows.append(dict(cell_r7=200, FP_Power=5.0))
         rows.append(dict(cell_r7=100, FP_Power=float(np.nan)))
         batches.append(rows)
-        pd.DataFrame(batches[-1]).to_parquet(src / f"b{b}.parquet", index=False)
+        path = src / f"b{b}.parquet"
+        pd.DataFrame(batches[-1]).to_parquet(path, index=False)
+        # distinct mtimes: the file source takes one file per trigger in
+        # modification-time order, so equal mtimes could reorder batches
+        os.utime(path, (t0 + b, t0 + b))
 
     stream = (
         spark.readStream.schema("cell_r7 long, FP_Power double")
